@@ -870,12 +870,14 @@ def build_parser() -> argparse.ArgumentParser:
     clone = sub.add_parser("clone", parents=[common], help="clone a materialized relation")
     clone.add_argument("node")
     clone.add_argument("new_name")
+    from .plans.star_layout import KINDS
+
     lay = sub.add_parser(
         "layout",
         parents=[common],
-        help="engine-owned physical layouts (bucketed star, z-order, "
-        "cents-enriched lineitem, q1 grain rollup): list / ensure / "
-        "refresh",
+        help="engine-owned derived tables (bucketed star and its rollups, "
+        "z-order, cents-enriched lineitem, q1 grain rollup): list / ensure "
+        "/ refresh",
     )
     lay.add_argument("layout_action", choices=["list", "ensure", "refresh"])
     lay.add_argument(
@@ -884,7 +886,7 @@ def build_parser() -> argparse.ArgumentParser:
     lay.add_argument(
         "--kind",
         default="all",
-        choices=["star", "zorder", "lineitem", "q1-rollup", "all"],
+        choices=[*KINDS, "all"],
         help="which layout family to ensure/refresh",
     )
     return p
@@ -895,8 +897,8 @@ def _cmd_layout(spark, args) -> int:
     prints every substitution-capable layout the catalog discovers (with
     per-use freshness verdicts); `layout ensure --data DIR` builds (or
     verifies) them; `layout refresh --data DIR` folds append-only deltas
-    (plans/star_layout.refresh_*; falls back to rebuild on any
-    non-append change)."""
+    (plans/star_layout.refresh; falls back to rebuild on any non-append
+    change). Families are the ``kind`` of the declared tables."""
     from .plans import layout_catalog, star_layout
 
     act = args.layout_action
@@ -906,7 +908,7 @@ def _cmd_layout(spark, args) -> int:
             print("no layouts in the warehouse")
             return 0
         for tbl, spec in found:
-            fresh = layout_catalog._fresh_and_routable(spark, spec)
+            fresh = star_layout.routable(spark, spec)
             print(
                 f"{tbl}  covers={spec['covers']}  "
                 f"group={spec.get('group', '-')}  "
@@ -916,27 +918,15 @@ def _cmd_layout(spark, args) -> int:
     if not args.data:
         print(f"layout {act}: pass --data DIR", file=sys.stderr)
         return 2
-    kinds = (
-        ["star", "zorder", "lineitem", "q1-rollup"]
-        if args.kind == "all"
-        else [args.kind]
-    )
-    fns = {
-        "ensure": {
-            "star": star_layout.ensure_star_layout,
-            "zorder": star_layout.ensure_zorder_layout,
-            "lineitem": star_layout.ensure_lineitem_layout,
-            "q1-rollup": star_layout.ensure_q1_rollup,
-        },
-        "refresh": {
-            "star": star_layout.refresh_star_layout,
-            "zorder": star_layout.refresh_zorder_layout,
-            "lineitem": star_layout.refresh_lineitem_layout,
-            "q1-rollup": star_layout.refresh_q1_rollup,
-        },
-    }[act]
-    for kind in kinds:
-        out = fns[kind](spark, args.data)
+    for kind in star_layout.KINDS if args.kind == "all" else [args.kind]:
+        if act == "refresh":
+            out = star_layout.refresh_kind(spark, kind, args.data)
+        else:
+            out = [
+                star_layout.ensure(spark, d, args.data)
+                for d in star_layout.DECLARATIONS
+                if d.kind == kind
+            ]
         print(f"{kind}: {out}")
     return 0
 

@@ -12,8 +12,10 @@ for the raw scan of the relation it covers — in USER-AUTHORED models
 (SQL-string or Python) resolved through the Project registry, not just
 in the engine's own queries.
 
-The substitution contract (written by plans/star_layout.py at build
-time, fields in the ``_dbt_layout_spec.json`` sidecar):
+The substitution contract (written at build time by plans/star_layout.py's
+generic ensure for every ``Derived`` declaration with ``covers=True`` —
+today the bucketed star pair and the cents lineitem — as fields of the
+``_dbt_layout_spec.json`` sidecar):
 
 - ``covers``: the logical source relation this layout can substitute.
 - ``covers_paths``: the covered relation's file paths — a candidate
@@ -23,13 +25,13 @@ time, fields in the ``_dbt_layout_spec.json`` sidecar):
 - ``source_paths`` + ``source_fp``: ALL derivation inputs and their
   fingerprint at build time (plans/fingerprint.py). Routing recomputes
   the fingerprint per use — metadata-only, pure os.stat — and refuses a
-  stale layout, the same guard the rollup router and
-  ``maybe_star_layout`` apply.
+  stale layout: ``star_layout.routable``, the one check the ad-hoc
+  ``star_layout.route`` applies too.
 - ``source_columns``: the covered relation's exact column list.
   ``SELECT source_columns FROM layout`` is row- and schema-identical to
   the raw scan BY BUILD CONTRACT (identity-plus-enrichment frames;
-  row-count parity machine-checked at build for derived layouts —
-  star_layout.ensure_star_layout), so the swap is sound in ANY plan:
+  row-count parity machine-checked at build for derived layouts — the
+  star_layout.STAR_CUSTMAP proof), so the swap is sound in ANY plan:
   ``SELECT *``, joins, aggregates, everything.
 - ``route_gate_paths``: files whose current on-disk size must reach
   ``ROUTE_MIN_FACT_BYTES`` for the group to route (the star group's
@@ -43,7 +45,7 @@ planner pays to enumerate splits. The payoff is the 100 TB fact never
 shuffling: a user model joining orders⋈customer on the bucket key gets
 two co-bucketed scans and an exchange-free join without knowing the
 layout exists. Fallback is silent and NEVER builds — exactly the
-``maybe_star_layout`` contract.
+``star_layout.route`` contract.
 
 Reference parity: dbt users get this by hand — they point ``ref()`` at
 a pre-built mart. Here the engine does the pointing, with a freshness
@@ -54,14 +56,11 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
-from . import star_layout
-from .star_layout import LAYOUT_SIDECAR, _register_bucketed
-
-#: Name of the layout table the last route_source() hit resolved to, or
-#: None (observability + tests; mirrors star_layout.last_route_used).
-last_route_used: str | None = None
+from .star_layout import LAYOUT_SIDECAR, _file_sizes, routable
 
 #: Per-session discovery cache: warehouse dir -> (listing fingerprint,
 #: [(table, spec), ...]). The LISTING is cached; every spec's freshness
@@ -74,21 +73,6 @@ def _warehouse_dir(spark: SparkSession) -> str:
 
     wh = spark.conf.get("spark.sql.warehouse.dir")
     return re.sub(r"^file:", "", wh)
-
-
-def _expand_files(paths: list[str]) -> set[str]:
-    """Expand file-or-directory paths to the set of visible data files —
-    the same listing rule files_fingerprint and Spark's file index use
-    (hidden ``.``/``_`` entries excluded)."""
-    out: set[str] = set()
-    for p in paths:
-        if os.path.isfile(p):
-            out.add(os.path.abspath(p))
-        elif os.path.isdir(p):
-            for f in os.listdir(p):
-                if not f.startswith((".", "_")):
-                    out.add(os.path.abspath(os.path.join(p, f)))
-    return out
 
 
 def discover_layouts(spark: SparkSession) -> list[tuple[str, dict]]:
@@ -125,31 +109,6 @@ def discover_layouts(spark: SparkSession) -> list[tuple[str, dict]]:
             found.append((spec["table"], spec))
     _DISCOVERY_CACHE[wh] = (stamp, found)
     return found
-
-
-def _fresh_and_routable(spark: SparkSession, spec: dict) -> bool:
-    """Per-use verification: sources unchanged since build (fingerprint),
-    group fact big enough to win (gate), files complete (_SUCCESS)."""
-    from .fingerprint import dir_is_complete, files_fingerprint
-
-    if spec.get("pending"):
-        return False  # mid-refresh marker: the table may be half-appended
-    gate_files = _expand_files(spec.get("route_gate_paths", []))
-    try:
-        gate_bytes = sum(os.stat(f).st_size for f in gate_files)
-    except OSError:
-        return False
-    # live attribute lookup: tests pin the gate via star_layout
-    if gate_bytes < star_layout.ROUTE_MIN_FACT_BYTES:
-        return False
-    if files_fingerprint(spec["source_paths"]) != spec["source_fp"]:
-        return False
-    path = os.path.join(_warehouse_dir(spark), spec["table"].lower())
-    if not spark.catalog.tableExists(spec["table"]):
-        if not dir_is_complete(path):
-            return False
-        _register_bucketed(spark, spec["table"], spec, path)
-    return True
 
 
 def _norm_input_files(df: DataFrame) -> set[str]:
@@ -189,7 +148,7 @@ def _is_bare_scan(df: DataFrame) -> bool:
             for i in range(children.size()):
                 stack.append(children.apply(i))
         return True
-    except Exception:
+    except (Py4JError, PySparkException):
         return False
 
 
@@ -204,15 +163,13 @@ def route_source(spark: SparkSession, df: DataFrame) -> DataFrame | None:
     (``_is_bare_scan``) — however the user loaded the files, but never a
     pre-transformed (filtered/projected/rewritten) view of them. Every
     check is metadata-only; fallback is silent; never builds."""
-    global last_route_used
-    last_route_used = None
     layouts = discover_layouts(spark)
     if not layouts:
         return None
     try:
         files = _norm_input_files(df)
-    except Exception:
-        return None
+    except (Py4JError, PySparkException):
+        return None  # no file listing to match (the JVM refused it)
     if not files:
         return None  # in-memory frame: nothing to match
     if not _is_bare_scan(df):
@@ -221,20 +178,20 @@ def route_source(spark: SparkSession, df: DataFrame) -> DataFrame | None:
         # untouched relation is substitutable
         return None
     for tbl, spec in layouts:
-        if _expand_files(spec["covers_paths"]) != files:
+        covered = _file_sizes(spec["covers_paths"])
+        if covered is None or set(covered) != files:
             continue
         if list(df.columns) != list(spec["source_columns"]):
             # right files but a different column view (user pre-projected
             # or the source schema moved under the fingerprint): only the
             # full original relation is substitutable
             continue
-        if not _fresh_and_routable(spark, spec):
+        if not routable(spark, spec):
             continue
         routed = spark.table(tbl).select(*spec["source_columns"])
         routed = _bridge_ntz(spark, routed, df)
         if routed is None or routed.schema != df.schema:
             continue  # type drift: refuse rather than cast silently
-        last_route_used = tbl
         return routed
     return None
 

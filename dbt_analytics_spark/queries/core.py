@@ -145,10 +145,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of wrapping — at that scale the remedy is decimal
     accumulation or a salted two-level rollup.
     """
-    from ..plans.star_layout import (
-        maybe_lineitem_layout,
-        maybe_q1_rollup,
-    )
+    from ..plans.star_layout import LINEITEM, Q1_ROLLUP, route
 
     # Layout awareness (round 14), best route first. (1) The q1 GRAIN
     # ROLLUP: the whole aggregation precomputed as 6 rows of re-foldable
@@ -161,10 +158,10 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 60M; the rollup closes the rest). Both fingerprint-guarded with
     # silent fallback, like j1's star routing; q1b shares this query's
     # oracle so every routed path stays hash-checked. NEVER builds.
-    rollup = maybe_q1_rollup(spark, sf_dir)
+    rollup = route(spark, Q1_ROLLUP, sf_dir)
     if rollup is not None:
         return _q1_from_rollup(spark.table(rollup))
-    tbl = maybe_lineitem_layout(spark, sf_dir)
+    tbl = route(spark, LINEITEM, sf_dir)
     if tbl is not None:
         return _q1_from_stored_cents(spark.table(tbl))
 
@@ -474,20 +471,16 @@ GROUP BY event_type
 # ---------------------------------------------------------------------------
 
 def j1_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.star_layout import (
-        maybe_nation_rollup,
-        maybe_star_layout,
-        nation_names,
-    )
+    from ..plans.star_layout import NATION_ROLLUP, STAR, nation_names, route
 
     # Aggregate awareness (round 15): j1's whole 15M-row fact join is
     # precomputed as 25 re-foldable nation-grain partials
-    # (star_layout.ensure_nation_rollup — the star-join twin of q1's
+    # (star_layout.NATION_ROLLUP — the star-join twin of q1's
     # grain rollup). When the rollup verifiably derives from the CURRENT
     # orders+customer files, j1 is a 25-row read + live name attach; the
     # final expressions are IDENTICAL to j1b's (same oracle, hash-checked
     # every round). Fallback ladder: rollup → bucketed layout → raw.
-    rollup = maybe_nation_rollup(spark, sf_dir)
+    rollup = route(spark, NATION_ROLLUP, sf_dir)
     if rollup is not None:
         return _j1_from_rollup(spark, sf_dir, spark.table(rollup))
     # Layout awareness (round 13): when the engine already owns the
@@ -497,7 +490,7 @@ def j1_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-query broadcast/shuffle. Same silent-fallback contract as
     # rollup routing; j1b shares this query's oracle, so routing never
     # weakens the correctness gate. NEVER builds the layout.
-    if maybe_star_layout(spark, sf_dir) is not None:
+    if all(route(spark, d, sf_dir) for d in STAR):
         return j1b_join_agg_bucketed(spark, sf_dir)
 
     t = load_testdata(spark, sf_dir)
@@ -1041,18 +1034,18 @@ FROM flagged GROUP BY 1, 2
 # ---------------------------------------------------------------------------
 
 def w3_pct_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.star_layout import maybe_nation_rollup, maybe_star_layout
+    from ..plans.star_layout import NATION_ROLLUP, STAR, route
 
     # Aggregate awareness (round 15) — see j1_join_agg: the 25-row
     # nation rollup carries exactly w3's partials; the tail below is
     # w3b's (same oracle). Ladder: rollup → bucketed layout → raw.
-    rollup = maybe_nation_rollup(spark, sf_dir)
+    rollup = route(spark, NATION_ROLLUP, sf_dir)
     if rollup is not None:
         return _w3_from_rollup(spark, sf_dir, spark.table(rollup))
     # Layout awareness — see j1_join_agg: route to the engine-owned
     # bucketed layout when it exists and is verifiably fresh; w3b shares
     # this query's oracle. Silent fallback, never builds.
-    if maybe_star_layout(spark, sf_dir) is not None:
+    if all(route(spark, d, sf_dir) for d in STAR):
         return w3b_pct_of_total_bucketed(spark, sf_dir)
 
     t = load_testdata(spark, sf_dir)
@@ -1221,20 +1214,21 @@ GROUP BY sla_class
 
 def g1_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.star_layout import (
+        MONTHLY_ROLLUP,
         ROUTE_MIN_FACT_BYTES,
         guarded_cents_spend,
-        maybe_monthly_rollup,
+        route,
     )
 
     # Aggregate awareness (round 16): the whole 15M-row monthly
     # aggregate precomputed as ~80 re-foldable partials
-    # (star_layout.ensure_monthly_rollup — the single-source twin of
+    # (star_layout.MONTHLY_ROLLUP — the single-source twin of
     # q1's grain rollup, provisioned by the same star-family warmup).
     # When the rollup verifiably derives from the CURRENT orders files,
     # g1 is an ~80-row read + gap-fill; silent fallback, fact-size
     # gated, NEVER builds — so the driver's small-SF correctness gate
     # always exercises the raw arithmetic below.
-    rollup = maybe_monthly_rollup(spark, sf_dir)
+    rollup = route(spark, MONTHLY_ROLLUP, sf_dir)
     if rollup is not None:
         monthly = spark.table(rollup).select(
             "month_start",
@@ -1288,7 +1282,7 @@ def g1_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # EXACT cents, long sums are exact, and the decimal(38,0)/100
         # division is the same correctly-rounded double as
         # sum(decimal)::double — the o_cents/l_cents layout argument
-        # (star_layout.py:171), applied in-query. Measured at sf10: the
+        # (star_layout._derive_orders), applied in-query. Measured at sf10: the
         # monthly aggregate drops 1.19 -> 0.79 s (decimal-sum machinery
         # is the cost, not date_trunc); equality verified bit-exact on
         # every month at sf10 and by the oracle gate. The division goes
@@ -2958,14 +2952,14 @@ WHERE rev_dec = (SELECT MAX(rev_dec) FROM rev)
 # ---------------------------------------------------------------------------
 
 def q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.star_layout import maybe_custdist_rollup, maybe_star_layout
+    from ..plans.star_layout import CUSTDIST_ROLLUP, STAR, route
 
     # Aggregate awareness (round 15): q13's whole answer is precomputed
-    # as the ~40-row custdist histogram (star_layout.
-    # ensure_custdist_rollup — two-level: a foldable per-customer count
-    # base + the derived histogram incl. the zero bucket). Ladder:
-    # rollup → bucketed layout → raw; same oracle throughout.
-    hist = maybe_custdist_rollup(spark, sf_dir)
+    # as the ~40-row custdist histogram (star_layout.CUSTDIST_ROLLUP —
+    # two-level: a foldable per-customer count base + the derived
+    # histogram incl. the zero bucket). Ladder: rollup → bucketed
+    # layout → raw; same oracle throughout.
+    hist = route(spark, CUSTDIST_ROLLUP, sf_dir)
     if hist is not None:
         return spark.table(hist).orderBy(
             F.desc("custdist"), F.desc("c_count")
@@ -2973,7 +2967,7 @@ def q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Layout awareness — see j1_join_agg: route to the engine-owned
     # bucketed layout when it exists and is verifiably fresh; q13b
     # shares this query's oracle. Silent fallback, never builds.
-    if maybe_star_layout(spark, sf_dir) is not None:
+    if all(route(spark, d, sf_dir) for d in STAR):
         return q13b_custdist_bucketed(spark, sf_dir)
 
     t = load_testdata(spark, sf_dir)
@@ -3045,7 +3039,7 @@ def q13b_custdist_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ZO1 — box-predicate rollup on the engine-owned Z-ORDERED layout
-# (plans/star_layout.ensure_zorder_layout + operators/zorder.py): orders
+# (plans/star_layout.ZORDER + operators/zorder.py): orders
 # clustered along the Morton curve of (o_custkey, o_orderdate), so this
 # two-sided box prunes parquet row groups on BOTH columns via plain
 # min/max stats — single-column sort prunes only its own column. Same
@@ -3054,9 +3048,9 @@ def q13b_custdist_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def zo1_zorder_box_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.star_layout import ensure_zorder_layout
+    from ..plans.star_layout import ZORDER, ensure
 
-    tbl = ensure_zorder_layout(spark, sf_dir)
+    tbl = ensure(spark, ZORDER, sf_dir)
     o = spark.table(tbl)
     return (
         o.filter(

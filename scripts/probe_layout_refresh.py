@@ -1,12 +1,12 @@
 #!/usr/bin/env python
 """Incremental star/z-order layout refresh at scale (VERDICT r13 item
 5): the layout cost 155.8 s to build at 240M rows and any source append
-staled it — refresh_star_layout must make an append-only delta cost
+staled it — the star family's refresh must make an append-only delta cost
 proportional to the DELTA, not the fact.
 
 Protocol: split a large orders table into main (~97%) + delta (~3%)
 part files in a mutable scratch source dir; build the star layout over
-main (timed); append the delta files; time refresh_star_layout (the
+main (timed); append the delta files; time refresh_kind("star") (the
 append-only fold); then drop the layout and time a full rebuild over
 the grown source (the cost the refresh avoided). Same for the z-order
 layout. Row-identity of refresh-vs-rebuild is pytest's job
@@ -72,7 +72,7 @@ def main() -> None:
     o_tbl, c_tbl = star_layout.ensure_star_layout(spark, SCRATCH)
     build_main_s = round(time.perf_counter() - t0, 2)
     t0 = time.perf_counter()
-    z_tbl = star_layout.ensure_zorder_layout(spark, SCRATCH)
+    z_tbl = star_layout.ensure(spark, star_layout.ZORDER, SCRATCH)
     zbuild_main_s = round(time.perf_counter() - t0, 2)
 
     # append the delta part files without touching existing ones
@@ -83,10 +83,10 @@ def main() -> None:
     shutil.rmtree(tmp)
 
     t0 = time.perf_counter()
-    statuses = star_layout.refresh_star_layout(spark, SCRATCH)
+    statuses = star_layout.refresh_kind(spark, "star", SCRATCH)
     refresh_s = round(time.perf_counter() - t0, 2)
     t0 = time.perf_counter()
-    zstatus = star_layout.refresh_zorder_layout(spark, SCRATCH)
+    zstatus = star_layout.refresh(spark, star_layout.ZORDER, SCRATCH)
     zrefresh_s = round(time.perf_counter() - t0, 2)
 
     # the avoided cost: full rebuild over the grown source
@@ -99,7 +99,7 @@ def main() -> None:
     star_layout.ensure_star_layout(spark, SCRATCH)
     rebuild_grown_s = round(time.perf_counter() - t0, 2)
     t0 = time.perf_counter()
-    star_layout.ensure_zorder_layout(spark, SCRATCH)
+    star_layout.ensure(spark, star_layout.ZORDER, SCRATCH)
     zrebuild_grown_s = round(time.perf_counter() - t0, 2)
 
     emit_gated(

@@ -69,12 +69,14 @@ def main() -> None:
 
     def _rollup_off(fn):
         def run():
-            old = star_layout.maybe_q1_rollup
-            star_layout.maybe_q1_rollup = lambda *a, **k: None
+            old = star_layout.route
+            star_layout.route = lambda spark, d, *a, **k: (
+                None if d is star_layout.Q1_ROLLUP else old(spark, d, *a, **k)
+            )
             try:
                 return fn()
             finally:
-                star_layout.maybe_q1_rollup = old
+                star_layout.route = old
         return run
 
     def _routing_off(fn):

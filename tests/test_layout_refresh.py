@@ -1,5 +1,5 @@
-"""Incremental layout refresh (plans/star_layout.refresh_star_layout /
-refresh_zorder_layout — VERDICT r13 item 5): an append-only source
+"""Incremental layout refresh (plans/star_layout.refresh over the star
+family and the Z-order table — VERDICT r13 item 5): an append-only source
 change folds only the delta files into the existing layout; anything
 else rebuilds. Contract under test: refreshed layout row-identical to a
 from-scratch build, delta path actually taken (status string), bucket
@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from dbt_analytics_spark.plans import layout_catalog, star_layout
 from dbt_analytics_spark.plans.fingerprint import read_sidecar, write_sidecar
+from tests.test_layout_routing import _star_route
 
 SF = "/root/testdata/sf0.001"
 TABLES = ("orders", "customer", "nation", "region")
@@ -70,7 +71,7 @@ def _table_rows(spark, tbl):
 def test_refresh_fresh_noop(spark, sf_dirs):
     d, _ = sf_dirs
     o_tbl, c_tbl = star_layout.ensure_star_layout(spark, d)
-    statuses = star_layout.refresh_star_layout(spark, d)
+    statuses = star_layout.refresh_kind(spark, "star", d)
     # five family members: both bucketed tables + nation, custdist and
     # monthly rollups. This fixture's customer split leaves orders
     # custkeys dangling, so the custdist member is parity-REFUSED
@@ -94,8 +95,8 @@ def test_refresh_appends_delta_row_identical_to_rebuild(spark, sf_dirs):
     _append(spark, d, "orders", holdout["orders"])
     _append(spark, d, "customer", holdout["customer"])
     # stale now: routing refuses until refreshed
-    assert star_layout.maybe_star_layout(spark, d) is None
-    statuses = star_layout.refresh_star_layout(spark, d)
+    assert _star_route(spark, d) is None
+    statuses = star_layout.refresh_kind(spark, "star", d)
     assert statuses[o_tbl].startswith("refreshed"), statuses
     assert statuses[c_tbl].startswith("refreshed"), statuses
     # the refresh APPENDED files (never rewrote the table)
@@ -106,7 +107,7 @@ def test_refresh_appends_delta_row_identical_to_rebuild(spark, sf_dirs):
         )
     refreshed = {t: _table_rows(spark, t) for t in (o_tbl, c_tbl)}
     # routing resumes on the refreshed layout
-    assert star_layout.maybe_star_layout(spark, d) == (o_tbl, c_tbl)
+    assert _star_route(spark, d) == (o_tbl, c_tbl)
 
     # row-identical to a from-scratch build of the same sources
     for t in (o_tbl, c_tbl):
@@ -123,7 +124,7 @@ def test_refreshed_layout_bucket_join_stays_exchange_free(spark, sf_dirs):
     d, holdout = sf_dirs
     o_tbl, c_tbl = star_layout.ensure_star_layout(spark, d)
     _append(spark, d, "orders", holdout["orders"])
-    star_layout.refresh_star_layout(spark, d)
+    star_layout.refresh_kind(spark, "star", d)
     o = spark.table(o_tbl).select("o_custkey", "o_cents")
     c = spark.table(c_tbl).select("c_custkey").hint("shuffle_hash")
     j = o.join(c, F.col("o_custkey") == F.col("c_custkey"))
@@ -142,10 +143,10 @@ def test_refresh_rebuilds_on_rewrite(spark, sf_dirs):
         f for f in sorted(os.listdir(tgt)) if f.endswith(".parquet")
     )
     os.remove(os.path.join(tgt, part))
-    statuses = star_layout.refresh_star_layout(spark, d)
+    statuses = star_layout.refresh_kind(spark, "star", d)
     assert statuses[o_tbl] == "rebuilt"
     assert statuses[c_tbl] == "fresh"  # customer untouched
-    assert star_layout.maybe_star_layout(spark, d) == (o_tbl, c_tbl)
+    assert _star_route(spark, d) == (o_tbl, c_tbl)
 
 
 def test_refresh_rebuilds_custmap_when_dim_changes(spark, sf_dirs):
@@ -156,7 +157,7 @@ def test_refresh_rebuilds_custmap_when_dim_changes(spark, sf_dirs):
     _append(spark, d, "customer", holdout["customer"])
     nat = os.path.join(d, "nation.parquet")
     os.utime(nat, None)
-    statuses = star_layout.refresh_star_layout(spark, d)
+    statuses = star_layout.refresh_kind(spark, "star", d)
     assert statuses[c_tbl] == "rebuilt"
 
 
@@ -181,7 +182,7 @@ def test_refresh_rebuild_refuses_dangling_fk_custmap(spark, sf_dirs):
     shutil.rmtree(cust_dir)
     os.rename(tmp, cust_dir)
     with pytest.raises(ValueError, match="row-parity"):
-        star_layout.refresh_star_layout(spark, d)
+        star_layout.refresh_kind(spark, "star", d)
     # the lossy table was refused and dropped: routing cannot serve it
     assert not spark.catalog.tableExists(c_tbl)
     from dbt_analytics_spark.sources import readers
@@ -200,21 +201,21 @@ def test_pending_marker_refuses_routing_and_rebuilds(spark, sf_dirs):
         path, {**spec, "pending": True}, star_layout.LAYOUT_SIDECAR
     )
     # routing refuses a mid-refresh table on both routers
-    assert star_layout.maybe_star_layout(spark, d) is None
+    assert _star_route(spark, d) is None
     orders = spark.read.parquet(os.path.join(d, "orders.parquet"))
     assert layout_catalog.route_source(spark, orders) is None
     # refresh recovers by rebuilding (append basis can't be trusted)
-    statuses = star_layout.refresh_star_layout(spark, d)
+    statuses = star_layout.refresh_kind(spark, "star", d)
     assert statuses[o_tbl] == "rebuilt"
-    assert star_layout.maybe_star_layout(spark, d) == (o_tbl, c_tbl)
+    assert _star_route(spark, d) == (o_tbl, c_tbl)
 
 
 def test_zorder_refresh_appends_and_stays_prunable(spark, sf_dirs):
     d, holdout = sf_dirs
-    tbl = star_layout.ensure_zorder_layout(spark, d)
-    assert star_layout.refresh_zorder_layout(spark, d) == "fresh"
+    tbl = star_layout.ensure(spark, star_layout.ZORDER, d)
+    assert star_layout.refresh(spark, star_layout.ZORDER, d) == "fresh"
     _append(spark, d, "orders", holdout["orders"])
-    status = star_layout.refresh_zorder_layout(spark, d)
+    status = star_layout.refresh(spark, star_layout.ZORDER, d)
     assert status.startswith("refreshed"), status
     # content identical to source (multiset)
     from dbt_analytics_spark.sources import readers
@@ -230,7 +231,7 @@ def test_zorder_refresh_appends_and_stays_prunable(spark, sf_dirs):
         f for f in sorted(os.listdir(tgt)) if f.endswith(".parquet")
     )
     os.utime(os.path.join(tgt, part), None)
-    assert star_layout.refresh_zorder_layout(spark, d) == "rebuilt"
+    assert star_layout.refresh(spark, star_layout.ZORDER, d) == "rebuilt"
 
 
 def test_custdist_refuses_dangling_orders_custkey(spark, sf_dirs):
@@ -245,15 +246,16 @@ def test_custdist_refuses_dangling_orders_custkey(spark, sf_dirs):
     # this fixture's customer split leaves orders custkeys dangling, so
     # the from-scratch build path refuses right at provisioning
     star_layout.ensure_star_layout(spark, d)
-    status = star_layout.ensure_custdist_rollup(spark, d)
+    status = star_layout.ensure(spark, star_layout.CUSTDIST_ROLLUP, d)
     assert status.startswith("refused") and "parity proof failed" in status
     # the corrupt pair was dropped: routing cannot serve it (q13 falls
     # back to the raw LEFT-JOIN plan, which handles dangling keys)
-    assert star_layout.maybe_custdist_rollup(spark, d) is None
-    base_tbl, hist_tbl, _ = star_layout._custdist_rollup_spec(spark, d)
+    assert star_layout.route(spark, star_layout.CUSTDIST_ROLLUP, d) is None
+    spec = star_layout._spec(spark, star_layout.CUSTDIST_ROLLUP, d)
+    base_tbl, hist_tbl = spec["base_table"], spec["table"]
     assert not spark.catalog.tableExists(base_tbl)
     assert not spark.catalog.tableExists(hist_tbl)
     # the refresh path reports the same refusal, non-fatally
-    status = star_layout.refresh_custdist_rollup(spark, d)
+    status = star_layout.refresh(spark, star_layout.CUSTDIST_ROLLUP, d)
     assert status.startswith("refused"), status
-    assert star_layout.maybe_custdist_rollup(spark, d) is None
+    assert star_layout.route(spark, star_layout.CUSTDIST_ROLLUP, d) is None

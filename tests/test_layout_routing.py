@@ -1,5 +1,5 @@
 """Layout awareness for ad-hoc star joins (plans/star_layout.py
-maybe_star_layout + the j1/w3/q13 routing in queries/core.py): route to
+route + the j1/w3/q13 routing in queries/core.py): route to
 the engine-owned bucketed layout ONLY when it exists and verifiably
 derives from the current source files; silent fallback otherwise; never
 build from a read path. The staleness contract mirrors the semantic
@@ -52,6 +52,12 @@ def _fresh_session_view():
     readers._CACHE.clear()
 
 
+def _star_route(spark, sf_dir):
+    """``(orders, custmap)`` when both bucketed star tables route."""
+    names = tuple(star_layout.route(spark, d, sf_dir) for d in star_layout.STAR)
+    return names if all(names) else None
+
+
 def _j1_rows(spark, sf_dir):
     return sorted(
         map(tuple, REGISTRY["j1_join_agg"][0](spark, sf_dir).collect())
@@ -59,31 +65,31 @@ def _j1_rows(spark, sf_dir):
 
 
 def test_route_misses_without_layout(spark, sf_copy):
-    assert star_layout.maybe_star_layout(spark, sf_copy) is None
-    assert star_layout.last_route_used is None
+    assert _star_route(spark, sf_copy) is None
     # the ad-hoc query still answers (raw-parquet fallback)
     assert len(_j1_rows(spark, sf_copy)) == 25
 
 
 def test_route_hits_after_ensure_and_matches_fallback(spark, sf_copy):
+    rollup = star_layout.NATION_ROLLUP
     raw = _j1_rows(spark, sf_copy)
-    assert star_layout.last_route_used is None
+    assert star_layout.route(spark, rollup, sf_copy) is None
     star_layout.ensure_star_layout(spark, sf_copy)
     routed = _j1_rows(spark, sf_copy)
-    assert star_layout.last_route_used is not None
+    assert star_layout.route(spark, rollup, sf_copy) == rollup.table(sf_copy)
     assert routed == raw
 
 
 def test_route_never_builds(spark, sf_copy):
     wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
     before = set(os.listdir(wh))
-    assert star_layout.maybe_star_layout(spark, sf_copy) is None
+    assert _star_route(spark, sf_copy) is None
     assert set(os.listdir(wh)) == before  # no layout dirs appeared
 
 
 def test_route_stale_after_source_rewrite_falls_back(spark, sf_copy):
     star_layout.ensure_star_layout(spark, sf_copy)
-    assert star_layout.maybe_star_layout(spark, sf_copy) is not None
+    assert _star_route(spark, sf_copy) is not None
     # the source fact is REWRITTEN after the layout was built: keep only
     # orders from one status so the answer visibly changes
     orders = spark.read.parquet(os.path.join(sf_copy, "orders.parquet"))
@@ -95,7 +101,7 @@ def test_route_stale_after_source_rewrite_falls_back(spark, sf_copy):
     os.rename(tmp_new, os.path.join(sf_copy, "orders.parquet"))
     _fresh_session_view()
     # the router must refuse the stale layout...
-    assert star_layout.maybe_star_layout(spark, sf_copy) is None
+    assert _star_route(spark, sf_copy) is None
     # ...and the ad-hoc query must answer from the NEW source
     rows = REGISTRY["j1_join_agg"][0](spark, sf_copy)
     total = sum(r["n_orders"] for r in rows.collect())
@@ -137,10 +143,10 @@ def test_route_refuses_partial_write(spark, sf_copy):
         shutil.move(d + ".keep", d)
     # crash the orders write: no _SUCCESS
     os.remove(os.path.join(dirs[o_tbl], "_SUCCESS"))
-    assert star_layout.maybe_star_layout(spark, sf_copy) is None
+    assert _star_route(spark, sf_copy) is None
     # restore the marker: the router re-registers and routes
     open(os.path.join(dirs[o_tbl], "_SUCCESS"), "w").close()
-    assert star_layout.maybe_star_layout(spark, sf_copy) is not None
+    assert _star_route(spark, sf_copy) is not None
     assert len(_j1_rows(spark, sf_copy)) == 25
 
 
@@ -148,22 +154,19 @@ def test_route_respects_fact_size_gate(spark, sf_copy, monkeypatch):
     """Below ROUTE_MIN_FACT_BYTES the raw broadcast plan wins — the
     router must decline even when a fresh layout exists."""
     star_layout.ensure_star_layout(spark, sf_copy)
-    assert star_layout.maybe_star_layout(spark, sf_copy) is not None
+    assert _star_route(spark, sf_copy) is not None
     monkeypatch.setattr(star_layout, "ROUTE_MIN_FACT_BYTES", 1 << 60)
-    assert star_layout.maybe_star_layout(spark, sf_copy) is None
-    assert star_layout.last_route_used is None
+    assert _star_route(spark, sf_copy) is None
     assert len(_j1_rows(spark, sf_copy)) == 25  # raw fallback
 
 
 def test_spec_cache_invalidates_on_mid_session_schema_change(spark, sf_copy):
-    """_SPEC_STATIC caches the derived schema DDL per (appId, sf_dir,
-    n_buckets); if source files are rewritten with a CHANGED schema
+    """_SCHEMAS caches the derived schema DDL per (appId, table, source
+    fingerprint); if source files are rewritten with a CHANGED schema
     mid-session, a rebuild must write a sidecar carrying the FRESH
     schema, not the stale cached string (otherwise spec-equality gating
     forces one wasted rebuild in the next session)."""
-    specs_before = star_layout._star_specs(
-        spark, sf_copy, star_layout.N_BUCKETS
-    )
+    spec_before = star_layout._spec(spark, star_layout.STAR_ORDERS, sf_copy)
     # rewrite orders with an extra column mid-session
     orders = spark.read.parquet(os.path.join(sf_copy, "orders.parquet"))
     widened = orders.withColumn("o_extra", F.lit(1).cast("int"))
@@ -172,11 +175,9 @@ def test_spec_cache_invalidates_on_mid_session_schema_change(spark, sf_copy):
     os.remove(os.path.join(sf_copy, "orders.parquet"))
     os.rename(tmp_new, os.path.join(sf_copy, "orders.parquet"))
     _fresh_session_view()
-    specs_after = star_layout._star_specs(
-        spark, sf_copy, star_layout.N_BUCKETS
-    )
-    assert "o_extra" not in specs_before[0][2]["schema"]
-    assert "o_extra" in specs_after[0][2]["schema"]
+    spec_after = star_layout._spec(spark, star_layout.STAR_ORDERS, sf_copy)
+    assert "o_extra" not in spec_before["schema"]
+    assert "o_extra" in spec_after["schema"]
     # and a rebuild writes the fresh schema into the sidecar
     spark.conf.set("spark.dbt_analytics.orphanHealMinAgeSeconds", "0")
     try:
@@ -191,7 +192,7 @@ def test_spec_cache_invalidates_on_mid_session_schema_change(spark, sf_copy):
     )
     assert side is not None and "o_extra" in side["schema"]
     # the freshly built layout routes without a redundant rebuild
-    assert star_layout.maybe_star_layout(spark, sf_copy) is not None
+    assert _star_route(spark, sf_copy) is not None
 
 
 def _w3_rows(spark, sf_dir):
@@ -205,10 +206,10 @@ def test_nation_rollup_routes_j1_w3_and_matches_raw(spark, sf_copy):
     q1's grain rollup) routes j1 AND w3, row-identical to the raw
     fallback, and the plan reads the rollup table (no fact scan)."""
     raw_j1, raw_w3 = _j1_rows(spark, sf_copy), _w3_rows(spark, sf_copy)
-    assert star_layout.maybe_nation_rollup(spark, sf_copy) is None
+    assert star_layout.route(spark, star_layout.NATION_ROLLUP, sf_copy) is None
     star_layout.ensure_star_layout(spark, sf_copy)
-    tbl = star_layout.maybe_nation_rollup(spark, sf_copy)
-    assert tbl is not None and star_layout.last_route_used == tbl
+    tbl = star_layout.route(spark, star_layout.NATION_ROLLUP, sf_copy)
+    assert tbl == star_layout.NATION_ROLLUP.table(sf_copy)
     assert spark.table(tbl).count() == 25
     routed_j1 = REGISTRY["j1_join_agg"][0](spark, sf_copy)
     plan = routed_j1._jdf.queryExecution().optimizedPlan().toString()
@@ -222,12 +223,12 @@ def test_nation_rollup_stale_on_customer_change(spark, sf_copy):
     nations) must refuse the rollup AND refuse a delta fold (rebuild
     only)."""
     star_layout.ensure_star_layout(spark, sf_copy)
-    assert star_layout.maybe_nation_rollup(spark, sf_copy) is not None
+    assert star_layout.route(spark, star_layout.NATION_ROLLUP, sf_copy) is not None
     os.utime(os.path.join(sf_copy, "customer.parquet"), None)
-    assert star_layout.maybe_nation_rollup(spark, sf_copy) is None
+    assert star_layout.route(spark, star_layout.NATION_ROLLUP, sf_copy) is None
     _fresh_session_view()
-    assert star_layout.refresh_nation_rollup(spark, sf_copy) == "rebuilt"
-    assert star_layout.maybe_nation_rollup(spark, sf_copy) is not None
+    assert star_layout.refresh(spark, star_layout.NATION_ROLLUP, sf_copy) == "rebuilt"
+    assert star_layout.route(spark, star_layout.NATION_ROLLUP, sf_copy) is not None
 
 
 def test_nation_rollup_refresh_folds_orders_delta(spark, tmp_path):
@@ -244,7 +245,7 @@ def test_nation_rollup_refresh_folds_orders_delta(spark, tmp_path):
     main = orders.filter(F.col("o_orderkey") % 10 != 0)
     hold = orders.filter(F.col("o_orderkey") % 10 == 0)
     main.repartition(2).write.parquet(os.path.join(d, "orders.parquet"))
-    star_layout.ensure_nation_rollup(spark, d)
+    star_layout.ensure(spark, star_layout.NATION_ROLLUP, d)
     # append new part files without touching existing ones
     tmp = d + "_app"
     hold.coalesce(1).write.parquet(tmp)
@@ -256,10 +257,10 @@ def test_nation_rollup_refresh_folds_orders_delta(spark, tmp_path):
             )
     shutil.rmtree(tmp)
     _fresh_session_view()
-    assert star_layout.maybe_nation_rollup(spark, d) is None  # stale
-    status = star_layout.refresh_nation_rollup(spark, d)
+    assert star_layout.route(spark, star_layout.NATION_ROLLUP, d) is None  # stale
+    status = star_layout.refresh(spark, star_layout.NATION_ROLLUP, d)
     assert status.startswith("refreshed"), status
-    tbl = star_layout.maybe_nation_rollup(spark, d)
+    tbl = star_layout.route(spark, star_layout.NATION_ROLLUP, d)
     assert tbl is not None
     total = spark.table(tbl).agg(F.sum("n_orders")).collect()[0][0]
     assert total == orders.count()
@@ -267,7 +268,7 @@ def test_nation_rollup_refresh_folds_orders_delta(spark, tmp_path):
     refreshed = sorted(map(tuple, spark.table(tbl).collect()))
     spark.sql(f"DROP TABLE {tbl}")
     _fresh_session_view()
-    star_layout.ensure_nation_rollup(spark, d)
+    star_layout.ensure(spark, star_layout.NATION_ROLLUP, d)
     scratch = sorted(map(tuple, spark.table(tbl).collect()))
     assert refreshed == scratch
 
@@ -283,9 +284,9 @@ def test_custdist_rollup_routes_q13_and_matches_raw(spark, sf_copy):
     derived histogram incl. the zero bucket) answers q13 row-identically
     to the raw fallback — ORDER included (it's an ordered query)."""
     raw = _q13_rows(spark, sf_copy)
-    assert star_layout.maybe_custdist_rollup(spark, sf_copy) is None
+    assert star_layout.route(spark, star_layout.CUSTDIST_ROLLUP, sf_copy) is None
     star_layout.ensure_star_layout(spark, sf_copy)
-    tbl = star_layout.maybe_custdist_rollup(spark, sf_copy)
+    tbl = star_layout.route(spark, star_layout.CUSTDIST_ROLLUP, sf_copy)
     assert tbl is not None
     assert _q13_rows(spark, sf_copy) == raw
     # zero-bucket invariant: histogram total == customer count (the 0
@@ -308,7 +309,7 @@ def test_custdist_rollup_refresh_folds_orders_delta(spark, tmp_path):
     main = orders.filter(F.col("o_orderkey") % 10 != 0)
     hold = orders.filter(F.col("o_orderkey") % 10 == 0)
     main.repartition(2).write.parquet(os.path.join(d, "orders.parquet"))
-    star_layout.ensure_custdist_rollup(spark, d)
+    star_layout.ensure(spark, star_layout.CUSTDIST_ROLLUP, d)
     tmp = d + "_app"
     hold.coalesce(1).write.parquet(tmp)
     tgt = os.path.join(d, "orders.parquet")
@@ -319,10 +320,10 @@ def test_custdist_rollup_refresh_folds_orders_delta(spark, tmp_path):
             )
     shutil.rmtree(tmp)
     _fresh_session_view()
-    assert star_layout.maybe_custdist_rollup(spark, d) is None  # stale
-    status = star_layout.refresh_custdist_rollup(spark, d)
+    assert star_layout.route(spark, star_layout.CUSTDIST_ROLLUP, d) is None  # stale
+    status = star_layout.refresh(spark, star_layout.CUSTDIST_ROLLUP, d)
     assert status.startswith("refreshed"), status
-    tbl = star_layout.maybe_custdist_rollup(spark, d)
+    tbl = star_layout.route(spark, star_layout.CUSTDIST_ROLLUP, d)
     assert tbl is not None
     # invariant: histogram total == customer count, and the refreshed
     # histogram equals a from-scratch build over the same sources
@@ -332,10 +333,12 @@ def test_custdist_rollup_refresh_folds_orders_delta(spark, tmp_path):
     )
     refreshed = sorted(map(tuple, spark.table(tbl).collect()))
     spark.sql(f"DROP TABLE {tbl}")
-    base_tbl, _, _ = star_layout._custdist_rollup_spec(spark, d)
+    base_tbl = star_layout._spec(spark, star_layout.CUSTDIST_ROLLUP, d)[
+        "base_table"
+    ]
     spark.sql(f"DROP TABLE {base_tbl}")
     _fresh_session_view()
-    star_layout.ensure_custdist_rollup(spark, d)
+    star_layout.ensure(spark, star_layout.CUSTDIST_ROLLUP, d)
     scratch = sorted(map(tuple, spark.table(tbl).collect()))
     assert refreshed == scratch
 
@@ -352,10 +355,10 @@ def test_monthly_rollup_routes_g1_and_matches_raw(spark, sf_copy):
     the raw fallback, and the routed plan reads the rollup table only
     (no orders scan)."""
     raw = _g1_rows(spark, sf_copy)
-    assert star_layout.maybe_monthly_rollup(spark, sf_copy) is None
+    assert star_layout.route(spark, star_layout.MONTHLY_ROLLUP, sf_copy) is None
     star_layout.ensure_star_layout(spark, sf_copy)
-    tbl = star_layout.maybe_monthly_rollup(spark, sf_copy)
-    assert tbl is not None and star_layout.last_route_used == tbl
+    tbl = star_layout.route(spark, star_layout.MONTHLY_ROLLUP, sf_copy)
+    assert tbl == star_layout.MONTHLY_ROLLUP.table(sf_copy)
     routed = REGISTRY["g1_date_spine"][0](spark, sf_copy)
     plan = routed._jdf.queryExecution().optimizedPlan().toString()
     assert tbl in plan and "orders.parquet" not in plan
@@ -382,9 +385,9 @@ def test_monthly_rollup_schema_literal_matches_frame(spark):
 
 def test_monthly_rollup_stale_on_orders_change(spark, sf_copy):
     star_layout.ensure_star_layout(spark, sf_copy)
-    assert star_layout.maybe_monthly_rollup(spark, sf_copy) is not None
+    assert star_layout.route(spark, star_layout.MONTHLY_ROLLUP, sf_copy) is not None
     os.utime(os.path.join(sf_copy, "orders.parquet"), None)
-    assert star_layout.maybe_monthly_rollup(spark, sf_copy) is None
+    assert star_layout.route(spark, star_layout.MONTHLY_ROLLUP, sf_copy) is None
     # the raw fallback still answers (silent-fallback contract)
     assert _g1_rows(spark, sf_copy)
 
@@ -403,7 +406,7 @@ def test_monthly_rollup_refresh_folds_orders_delta(spark, tmp_path):
     main = orders.filter(F.col("o_orderkey") % 10 != 0)
     hold = orders.filter(F.col("o_orderkey") % 10 == 0)
     main.repartition(2).write.parquet(os.path.join(d, "orders.parquet"))
-    star_layout.ensure_monthly_rollup(spark, d)
+    star_layout.ensure(spark, star_layout.MONTHLY_ROLLUP, d)
     tmp = d + "_app"
     hold.coalesce(1).write.parquet(tmp)
     tgt = os.path.join(d, "orders.parquet")
@@ -414,17 +417,17 @@ def test_monthly_rollup_refresh_folds_orders_delta(spark, tmp_path):
             )
     shutil.rmtree(tmp)
     _fresh_session_view()
-    assert star_layout.maybe_monthly_rollup(spark, d) is None  # stale
-    status = star_layout.refresh_monthly_rollup(spark, d)
+    assert star_layout.route(spark, star_layout.MONTHLY_ROLLUP, d) is None  # stale
+    status = star_layout.refresh(spark, star_layout.MONTHLY_ROLLUP, d)
     assert status.startswith("refreshed"), status
-    tbl = star_layout.maybe_monthly_rollup(spark, d)
+    tbl = star_layout.route(spark, star_layout.MONTHLY_ROLLUP, d)
     assert tbl is not None
     total = spark.table(tbl).agg(F.sum("cnt")).collect()[0][0]
     assert total == orders.count()
     refreshed = sorted(map(tuple, spark.table(tbl).collect()))
     spark.sql(f"DROP TABLE {tbl}")
     _fresh_session_view()
-    star_layout.ensure_monthly_rollup(spark, d)
+    star_layout.ensure(spark, star_layout.MONTHLY_ROLLUP, d)
     scratch = sorted(map(tuple, spark.table(tbl).collect()))
     assert refreshed == scratch
 
@@ -436,9 +439,9 @@ def test_q1_routes_to_lineitem_layout_and_matches_fallback(spark, sf_copy):
     raw = sorted(
         map(tuple, REGISTRY["q1_pricing_summary"][0](spark, sf_copy).collect())
     )
-    assert star_layout.maybe_lineitem_layout(spark, sf_copy) is None
+    assert star_layout.route(spark, star_layout.LINEITEM, sf_copy) is None
     star_layout.ensure_lineitem_layout(spark, sf_copy)
-    assert star_layout.maybe_lineitem_layout(spark, sf_copy) is not None
+    assert star_layout.route(spark, star_layout.LINEITEM, sf_copy) is not None
     routed_df = REGISTRY["q1_pricing_summary"][0](spark, sf_copy)
     plan = routed_df._jdf.queryExecution().executedPlan().toString()
     assert "li_cents" in plan  # the layout scan, not raw parquet
@@ -447,7 +450,7 @@ def test_q1_routes_to_lineitem_layout_and_matches_fallback(spark, sf_copy):
 
 def test_q1_lineitem_route_stale_after_rewrite_falls_back(spark, sf_copy):
     star_layout.ensure_lineitem_layout(spark, sf_copy)
-    assert star_layout.maybe_lineitem_layout(spark, sf_copy) is not None
+    assert star_layout.route(spark, star_layout.LINEITEM, sf_copy) is not None
     li = spark.read.parquet(os.path.join(sf_copy, "lineitem.parquet"))
     kept = li.filter(F.col("l_linestatus") == "F").collect()
     tmp_new = sf_copy + "_newli"
@@ -455,7 +458,7 @@ def test_q1_lineitem_route_stale_after_rewrite_falls_back(spark, sf_copy):
     os.remove(os.path.join(sf_copy, "lineitem.parquet"))
     os.rename(tmp_new, os.path.join(sf_copy, "lineitem.parquet"))
     _fresh_session_view()
-    assert star_layout.maybe_lineitem_layout(spark, sf_copy) is None
+    assert star_layout.route(spark, star_layout.LINEITEM, sf_copy) is None
     # q1 answers from the NEW source (raw fallback)
     rows = REGISTRY["q1_pricing_summary"][0](spark, sf_copy).collect()
     assert sum(r["count_order"] for r in rows) == len(kept)
@@ -474,7 +477,7 @@ def test_lineitem_layout_refresh_appends_delta(spark, tmp_path):
     hold = li.filter(F.col("l_orderkey") % 7 == 0)
     main.repartition(2).write.parquet(os.path.join(d, "lineitem.parquet"))
     tbl = star_layout.ensure_lineitem_layout(spark, d)
-    assert star_layout.refresh_lineitem_layout(spark, d) == "fresh"
+    assert star_layout.refresh(spark, star_layout.LINEITEM, d) == "fresh"
     # append new part files without touching existing ones
     tmp = d + "_app"
     hold.coalesce(1).write.parquet(tmp)
@@ -485,7 +488,7 @@ def test_lineitem_layout_refresh_appends_delta(spark, tmp_path):
                 os.path.join(d, "lineitem.parquet", f"app_{f}"),
             )
     shutil.rmtree(tmp)
-    status = star_layout.refresh_lineitem_layout(spark, d)
+    status = star_layout.refresh(spark, star_layout.LINEITEM, d)
     assert status.startswith("refreshed"), status
     refreshed = sorted(map(tuple, spark.table(tbl).collect()))
     spark.sql(f"DROP TABLE {tbl}")
@@ -512,7 +515,7 @@ def test_q1_prefers_grain_rollup_and_matches(spark, sf_copy):
 def test_q1_rollup_stale_falls_back_to_layout_then_raw(spark, sf_copy):
     star_layout.ensure_lineitem_layout(spark, sf_copy)
     star_layout.ensure_q1_rollup(spark, sf_copy)
-    assert star_layout.maybe_q1_rollup(spark, sf_copy) is not None
+    assert star_layout.route(spark, star_layout.Q1_ROLLUP, sf_copy) is not None
     li = spark.read.parquet(os.path.join(sf_copy, "lineitem.parquet"))
     kept = li.filter(F.col("l_linestatus") == "F").collect()
     tmp_new = sf_copy + "_newli2"
@@ -521,8 +524,8 @@ def test_q1_rollup_stale_falls_back_to_layout_then_raw(spark, sf_copy):
     os.rename(tmp_new, os.path.join(sf_copy, "lineitem.parquet"))
     _fresh_session_view()
     # both routes refuse the stale artifacts; q1 answers from the source
-    assert star_layout.maybe_q1_rollup(spark, sf_copy) is None
-    assert star_layout.maybe_lineitem_layout(spark, sf_copy) is None
+    assert star_layout.route(spark, star_layout.Q1_ROLLUP, sf_copy) is None
+    assert star_layout.route(spark, star_layout.LINEITEM, sf_copy) is None
     rows = REGISTRY["q1_pricing_summary"][0](spark, sf_copy).collect()
     assert sum(r["count_order"] for r in rows) == len(kept)
 
@@ -540,7 +543,7 @@ def test_q1_rollup_refresh_folds_delta_bit_identical(spark, tmp_path):
     hold = li.filter(F.col("l_orderkey") % 7 == 0)
     main.repartition(2).write.parquet(os.path.join(d, "lineitem.parquet"))
     tbl = star_layout.ensure_q1_rollup(spark, d)
-    assert star_layout.refresh_q1_rollup(spark, d) == "fresh"
+    assert star_layout.refresh(spark, star_layout.Q1_ROLLUP, d) == "fresh"
     tmp = d + "_app"
     hold.coalesce(1).write.parquet(tmp)
     for f in os.listdir(tmp):
@@ -550,7 +553,7 @@ def test_q1_rollup_refresh_folds_delta_bit_identical(spark, tmp_path):
                 os.path.join(d, "lineitem.parquet", f"app_{f}"),
             )
     shutil.rmtree(tmp)
-    status = star_layout.refresh_q1_rollup(spark, d)
+    status = star_layout.refresh(spark, star_layout.Q1_ROLLUP, d)
     assert status.startswith("refreshed"), status
     # routed answer == raw arithmetic over the grown source
     _fresh_session_view()
@@ -585,8 +588,8 @@ def test_custdist_refresh_refuses_dangling_delta(spark, tmp_path):
         shutil.copy(os.path.join(SF, f"{t}.parquet"), d)
     orders = spark.read.parquet(os.path.join(SF, "orders.parquet"))
     orders.repartition(2).write.parquet(os.path.join(d, "orders.parquet"))
-    star_layout.ensure_custdist_rollup(spark, d)
-    assert star_layout.maybe_custdist_rollup(spark, d) is not None
+    star_layout.ensure(spark, star_layout.CUSTDIST_ROLLUP, d)
+    assert star_layout.route(spark, star_layout.CUSTDIST_ROLLUP, d) is not None
     q13 = REGISTRY["q13_custdist"][0]
     routed = sorted(map(tuple, q13(spark, d).collect()))
 
@@ -604,9 +607,9 @@ def test_custdist_refresh_refuses_dangling_delta(spark, tmp_path):
     shutil.rmtree(tmp)
     _fresh_session_view()
 
-    status = star_layout.refresh_custdist_rollup(spark, d)
+    status = star_layout.refresh(spark, star_layout.CUSTDIST_ROLLUP, d)
     assert status.startswith("refused") and "parity proof" in status
-    assert star_layout.maybe_custdist_rollup(spark, d) is None
+    assert star_layout.route(spark, star_layout.CUSTDIST_ROLLUP, d) is None
     # the raw fallback serves q13 and the dangling order is invisible
     # to it (LEFT JOIN from customer), matching the pre-append answer
     assert sorted(map(tuple, q13(spark, d).collect())) == routed

@@ -4,6 +4,8 @@ in equi-join queries, and the range join stays a hash join."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from dbt_analytics_spark.queries import REGISTRY
@@ -23,13 +25,11 @@ def _plan(df) -> str:
 def _pin_raw_path(monkeypatch):
     """Force the RAW-parquet plan for the ad-hoc star queries: j1/w3/q13
     route to the bucketed layout whenever one exists in the shared test
-    warehouse (layout awareness, plans/star_layout.maybe_star_layout),
-    and these tests assert the raw plan's shape."""
+    warehouse (layout awareness, plans/star_layout.route), and these
+    tests assert the raw plan's shape."""
     from dbt_analytics_spark.plans import star_layout
 
-    monkeypatch.setattr(
-        star_layout, "maybe_star_layout", lambda *a, **k: None
-    )
+    monkeypatch.setattr(star_layout, "route", lambda *a, **k: None)
 
 
 @pytest.mark.parametrize(
@@ -516,28 +516,30 @@ def test_adhoc_star_queries_route_to_layout_exchange_free(spark, monkeypatch):
     def shuffles(plan: str) -> int:
         return plan.count("Exchange") - plan.count("BroadcastExchange")
 
+    def routed_to(df, d) -> str:
+        """The executed plan, after pinning that ``df`` reads exactly
+        the table of declaration ``d`` and nothing else."""
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        tables = set(re.findall(r"spark_catalog\.default\.(\w+)", plan))
+        assert tables == {d.table(SF)}, plan
+        return plan
+
     # Round 15: j1/w3 route FIRST to the 25-row nation-grain rollup
     # (aggregate awareness) — the fact never scans and the only
     # exchanges are the 25-row name broadcast (j1) plus w3's single-
     # partition window exchange over 25 rows.
     j1 = REGISTRY["j1_join_agg"][0](spark, SF)
-    assert star_layout.last_route_used is not None
-    plan = j1._jdf.queryExecution().executedPlan().toString()
-    assert "star_rollup" in plan and "star_orders" not in plan
+    plan = routed_to(j1, star_layout.NATION_ROLLUP)
     assert shuffles(plan) == 0, plan
 
     w3 = REGISTRY["w3_pct_of_total"][0](spark, SF)
-    assert star_layout.last_route_used is not None
-    plan = w3._jdf.queryExecution().executedPlan().toString()
-    assert "star_rollup" in plan and "star_orders" not in plan
+    plan = routed_to(w3, star_layout.NATION_ROLLUP)
     assert shuffles(plan) == 1, plan  # the 25-row global-window exchange
 
     # q13 routes to the ~40-row custdist histogram: a read + sort, no
     # fact scan, no joins
     q13 = REGISTRY["q13_custdist"][0](spark, SF)
-    assert star_layout.last_route_used is not None
-    plan = q13._jdf.queryExecution().executedPlan().toString()
-    assert "custdist_rollup" in plan and "star_orders" not in plan
+    plan = routed_to(q13, star_layout.CUSTDIST_ROLLUP)
     assert "Join" not in plan, plan
 
     # Round 16: g1 routes to the ~80-row monthly rollup — no orders
@@ -545,9 +547,8 @@ def test_adhoc_star_queries_route_to_layout_exchange_free(spark, monkeypatch):
     # coalesce(1) (SinglePartition satisfies AllTuples), so the routed
     # plan has NO exchange at all.
     g1 = REGISTRY["g1_date_spine"][0](spark, SF)
-    assert star_layout.last_route_used is not None
-    plan = g1._jdf.queryExecution().executedPlan().toString()
-    assert "monthly_rollup" in plan and "orders.parquet" not in plan
+    plan = routed_to(g1, star_layout.MONTHLY_ROLLUP)
+    assert "orders.parquet" not in plan
     assert "Join" not in plan, plan
     assert shuffles(plan) == 0, plan
 
