@@ -84,7 +84,11 @@ def main() -> None:
     # re-checks loadavg AFTER warmup and immediately before EACH measured
     # group (count series, exec series), and the artifact stamp is the
     # WORST of the per-window gates.
-    from dbt_analytics_spark.bench_gate import combine_gates, wait_for_quiet
+    from dbt_analytics_spark.bench_gate import (
+        combine_gates,
+        drift_band,
+        wait_for_quiet,
+    )
 
     gate_windows: dict[str, str] = {"start": wait_for_quiet()}
     spark = get_spark("bench")
@@ -316,16 +320,13 @@ def main() -> None:
     drift_max = float(os.environ.get("SPARK_GRAFT_BENCH_DRIFT_MAX", "1.5"))
     drift_retries = int(os.environ.get("SPARK_GRAFT_BENCH_DRIFT_RETRIES", "2"))
 
-    def _band_of(v: list[float]) -> float:
-        return (max(v) - min(v)) / min(v) if v else 0.0
-
     def _suspects() -> list[str]:
         return [
             n
             for n in headline
-            if _band_of(raw.get(n) or []) > drift_max
-            or _band_of(raw_duck.get(n) or []) > drift_max
-            or _band_of(raw_exec.get(n) or []) > drift_max
+            if drift_band(raw.get(n) or []) > drift_max
+            or drift_band(raw_duck.get(n) or []) > drift_max
+            or drift_band(raw_exec.get(n) or []) > drift_max
         ]
 
     drift_gate = "ok"
@@ -339,8 +340,9 @@ def main() -> None:
                 retried.add(name)
                 print(
                     f"# drift gate: re-measuring {name} (band "
-                    f"{_band_of(raw.get(name) or []):.2f}/"
-                    f"{_band_of(raw_duck.get(name) or []):.2f} > {drift_max})",
+                    f"{drift_band(raw.get(name) or []):.2f}/"
+                    f"{drift_band(raw_duck.get(name) or []):.2f} "
+                    f"> {drift_max})",
                     file=sys.stderr,
                 )
                 new_s: list[float] = []
@@ -351,9 +353,9 @@ def main() -> None:
                     new_s.append(round(e, 4))
                     if oracle_on and sql is not None:
                         new_d.append(round(_time_duck(sql), 4))
-                if _band_of(new_s) < _band_of(raw.get(name) or new_s):
+                if drift_band(new_s) < drift_band(raw.get(name) or new_s):
                     raw[name] = new_s
-                if new_d and _band_of(new_d) < _band_of(
+                if new_d and drift_band(new_d) < drift_band(
                     raw_duck.get(name) or new_d
                 ):
                     raw_duck[name] = new_d
@@ -369,7 +371,7 @@ def main() -> None:
                     new_e = [
                         round(_time_exec(name), 4) for _ in range(repeats)
                     ]
-                    if _band_of(new_e) < _band_of(raw_exec[name]):
+                    if drift_band(new_e) < drift_band(raw_exec[name]):
                         raw_exec[name] = new_e
                     times_exec[name] = min(raw_exec[name])
                     d = duckdb_times.get(name)
@@ -424,10 +426,10 @@ def main() -> None:
         sidecar_err = str(e)
 
     def _band(samples: dict[str, list[float]]) -> dict[str, float | None]:
-        # Per-query drift band: (max - min) / min over the repeats — how
-        # much the host moved under this query during THIS run.
+        # Per-query drift band (bench_gate.drift_band) — how much the
+        # host moved under this query during THIS run.
         return {
-            k: (round((max(v) - min(v)) / min(v), 3) if v else None)
+            k: (round(drift_band(v), 3) if v else None)
             for k, v in samples.items()
         }
 

@@ -1175,10 +1175,7 @@ def main(argv: list[str] | None = None, spark: "SparkSession | None" = None) -> 
                             file=sys.stderr,
                         )
                         return 2
-                    try:
-                        sl.discover_rollups()
-                    except Exception:
-                        pass
+                    sl.discover_rollups()
                     r = sl.refresh_rollup(args.name, args.model)
                     print(
                         f"rollup {r.name} -> {r.table} "
@@ -1209,10 +1206,7 @@ def main(argv: list[str] | None = None, spark: "SparkSession | None" = None) -> 
                 return 0
             # pick up rollups built by previous invocations (aggregate
             # awareness routes automatically when derivable)
-            try:
-                sl.discover_rollups()
-            except Exception:
-                pass
+            sl.discover_rollups()
             if args.saved:
                 sl.run_saved(args.saved).limit(args.limit).show(truncate=False)
                 return 0

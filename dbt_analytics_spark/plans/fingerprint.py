@@ -1,9 +1,10 @@
 """Relation-state fingerprints for derived-artifact staleness guards.
 
-Engine-maintained derived artifacts (aggregate-awareness rollups in
-plans/semantics.py, the bucketed star layout in plans/star_layout.py)
-trade one build scan for many accelerated reads — which is only sound
-while the SOURCE relation is the one the artifact was built from. dbt
+Engine-maintained derived tables (the star layouts and grain rollups of
+plans/star_layout.py, and the semantic layer's aggregate-awareness
+rollups that run through the same lifecycle) trade one build scan for
+many accelerated reads — which is only sound while the SOURCE relation
+is the one the artifact was built from. dbt
 records the analogous contract as the node checksum in the manifest
 (reference: SP/dbt/contracts/graph/nodes.py checksum field, used by
 state:modified selection); here the source is a physical relation, so
@@ -11,6 +12,11 @@ the fingerprint is the relation's input-file listing (path, size,
 mtime) — a metadata-only probe, one filesystem listing, no data scan.
 Any append, overwrite, or compaction changes the listing, so a stale
 artifact can never silently serve a routed answer.
+
+The listing is recorded in a JSON sidecar beside the table's data files
+(:func:`write_sidecar`; the lifecycle names it ``LAYOUT_SIDECAR``), the
+durable copy of the table's contract that a later session verifies before
+re-registering, routing or diffing for an incremental refresh.
 
 At cluster scale the same probe is one namenode/object-store listing of
 the table's files; the cost is O(files) driver-side metadata, which any
@@ -54,9 +60,14 @@ def data_listing(df: DataFrame) -> list[str]:
     return parts
 
 
+def digest(listing: list[str]) -> str:
+    """The fingerprint of a file listing."""
+    return hashlib.md5("\n".join(listing).encode()).hexdigest()
+
+
 def data_fingerprint(df: DataFrame) -> str:
     """Digest of :func:`data_listing` — the per-query staleness stamp."""
-    return hashlib.md5("\n".join(data_listing(df)).encode()).hexdigest()
+    return digest(data_listing(df))
 
 
 def files_listing(paths: list[str]) -> list[str]:
@@ -94,7 +105,7 @@ def files_fingerprint(paths: list[str]) -> str:
     """Like :func:`data_fingerprint` but straight from filesystem paths —
     no Spark plan analysis, pure os.stat, so a per-query staleness check
     costs microseconds (digest of :func:`files_listing`)."""
-    return hashlib.md5("\n".join(files_listing(paths)).encode()).hexdigest()
+    return digest(files_listing(paths))
 
 
 def defs_fingerprint(obj) -> str:
@@ -108,11 +119,11 @@ def defs_fingerprint(obj) -> str:
     ).hexdigest()
 
 
-def read_sidecar(path: str, name: str = "_dbt_artifact_spec.json") -> dict | None:
-    """Read a JSON sidecar spec from a table directory; None if absent
-    or unparseable. The sidecar is the DURABLE copy of an artifact's
-    spec: managed-table TBLPROPERTIES die with an in-memory session
-    catalog, but the files (and this sidecar beside them) persist in the
+def read_sidecar(path: str, name: str) -> dict | None:
+    """Read the JSON sidecar ``name`` from a table directory; None if
+    absent or unparseable. The sidecar is the DURABLE copy of a derived
+    table's spec: a catalog entry dies with an in-memory session catalog,
+    but the files (and this sidecar beside them) persist in the
     warehouse, so a later session can verify before re-registering."""
     p = os.path.join(path, name)
     try:
@@ -122,12 +133,12 @@ def read_sidecar(path: str, name: str = "_dbt_artifact_spec.json") -> dict | Non
         return None
 
 
-def write_sidecar(
-    path: str, spec: dict, name: str = "_dbt_artifact_spec.json"
-) -> None:
-    """Write the JSON sidecar spec into a table directory (atomic via
-    rename, so a concurrent reader never sees a torn file). Local-fs
-    I/O here; on a remote warehouse this becomes one object put."""
+def write_sidecar(path: str, spec: dict, name: str) -> None:
+    """Write ``spec`` as the JSON sidecar ``name`` into a table directory
+    (atomic via rename, so a concurrent reader never sees a torn file).
+    Local-fs I/O here; on a remote warehouse this becomes one object put.
+    Failures raise: a table whose contract was not recorded must not look
+    built."""
     p = os.path.join(path, name)
     tmp = p + ".tmp"
     with open(tmp, "w", encoding="utf-8") as fh:

@@ -60,19 +60,17 @@ from py4j.protocol import Py4JError
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
-from .star_layout import LAYOUT_SIDECAR, _file_sizes, routable
+from .star_layout import (
+    LAYOUT_SIDECAR,
+    _file_sizes,
+    _warehouse_path,
+    routable,
+)
 
 #: Per-session discovery cache: warehouse dir -> (listing fingerprint,
 #: [(table, spec), ...]). The LISTING is cached; every spec's freshness
 #: fingerprint is re-verified per use (os.stat only).
 _DISCOVERY_CACHE: dict[str, tuple[str, list[tuple[str, dict]]]] = {}
-
-
-def _warehouse_dir(spark: SparkSession) -> str:
-    import re
-
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    return re.sub(r"^file:", "", wh)
 
 
 def discover_layouts(spark: SparkSession) -> list[tuple[str, dict]]:
@@ -84,7 +82,7 @@ def discover_layouts(spark: SparkSession) -> list[tuple[str, dict]]:
     sidecar mtimes change."""
     from .fingerprint import read_sidecar
 
-    wh = _warehouse_dir(spark)
+    wh = _warehouse_path(spark, "")
     try:
         entries = sorted(os.listdir(wh))
     except OSError:

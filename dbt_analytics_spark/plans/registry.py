@@ -1014,15 +1014,20 @@ class Project:
         scan covered by a fresh engine-owned layout resolves to the
         layout's row- and schema-identical projection — every downstream
         model (SQL-string or Python) inherits the bucketed plan. Silent
-        fallback on any miss or error; never builds. Applied on BOTH
-        resolution paths (compile_node and _resolve_materialized)."""
+        fallback on a miss or on the JVM/filesystem errors routing
+        expects; any other error is a routing defect and raises. Never
+        builds. Applied on BOTH resolution paths (compile_node and
+        _resolve_materialized)."""
         if node.kind != "source" or not self.layout_routing:
             return df
-        try:
-            from .layout_catalog import route_source
+        from py4j.protocol import Py4JError
+        from pyspark.errors import PySparkException
 
+        from .layout_catalog import route_source
+
+        try:
             routed = route_source(self.spark, df)
-        except Exception:
+        except (Py4JError, PySparkException, OSError):
             routed = None
         return df if routed is None else routed
 

@@ -68,11 +68,15 @@ for that).
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import star_layout
+from .fingerprint import data_listing, digest, read_sidecar
 
 if TYPE_CHECKING:  # pragma: no cover
     from .registry import Project
@@ -358,7 +362,13 @@ class Rollup:
     re-aggregate exactly: sums/counts/sum_booleans re-sum, mins/maxes
     re-min/max. ``query()`` routes to the rollup automatically when the
     request is answerable from it (aggregate awareness) and falls back
-    to the fact silently otherwise."""
+    to the fact silently otherwise.
+
+    The stored table is a derived table of plans/star_layout.py's one
+    lifecycle (``SemanticLayer._rollup_decl``): its contract lives in the
+    ``LAYOUT_SIDECAR`` beside its files, which is how a later session
+    rediscovers, verifies and incrementally refreshes it. This record is
+    the layer's in-memory registration of that contract."""
 
     name: str
     model: str  # semantic model name
@@ -402,11 +412,6 @@ _ROLLUP_REAGG = {
     "max": "max",
     "avg": "_reagg_avg",
 }
-
-#: Sidecar holding the source relation's file LISTING at build time —
-#: the append-only incremental refresh diffs it against the current
-#: listing (plans/fingerprint.data_listing).
-_ROLLUP_FILES_SIDECAR = "_dbt_rollup_files.json"
 
 #: grain -> the coarser grains derivable from buckets stored at it.
 #: ISO weeks do not nest in months/quarters/years-by-truncation, so week
@@ -976,16 +981,102 @@ class SemanticLayer:
         Partial-aggregate exactness: decimal sums re-sum exactly
         (addition is associative), counts re-sum, min/max re-min/max —
         the routed answer is bit-identical to the fact-grain answer, so
-        routing never weakens the oracle gate."""
+        routing never weakens the oracle gate.
+
+        Build and reuse are the derived-table lifecycle's
+        (plans/star_layout.py ``_ensure``): with ``reuse_existing`` a
+        table whose sidecar equals this call's spec (definitions, dims,
+        source listing) is kept, re-registered from its files after a
+        dead session; otherwise the old table is purged and rebuilt."""
+        d, spec, t = self._rollup_decl(name, model, dims)
+        if not reuse_existing:
+            star_layout._drop(self.project.spark, spec, purge=True)
+        star_layout._ensure(self.project.spark, d, spec, lambda: t)
+        return self._register_rollup(spec)
+
+    def _rollup_decl(
+        self, name: str, model: str, dims: list[str]
+    ) -> tuple[star_layout.Derived, dict, dict[str, DataFrame]]:
+        """Rollup ``name`` as a derived-table declaration over the
+        semantic model's CURRENT relation: ``(Derived, spec, frames)``.
+        ``derive`` compiles the partials, ``fold`` re-aggregates stored
+        and delta partials per ``_ROLLUP_REAGG``. The spec is the
+        lifecycle's contract (table, schema, source listing and
+        fingerprint, ``covers_paths``) plus the rollup's own fields; the
+        definitions fingerprint, dims, measures and casts are static
+        keys, so drift in any of them rebuilds. Only a catalog TABLE
+        covers its directory — a new file of a view's inputs is not an
+        appended row of the view — so a view never folds."""
+        spark = self.project.spark
         sem = self.models[model]
         df = self.project._resolve_for_adhoc(sem.model)
-        dim_names, grains, kinds, casts, rollup_df = self._rollup_partials(
+        dim_names, grains, kinds, casts, partials = self._rollup_partials(
             sem, df, dims, model
         )
-        return self._write_rollup(
-            name, model, sem, df, dims, dim_names, grains, kinds, casts,
-            rollup_df, reuse_existing,
+        listing = data_listing(df)
+        src = self.project.qualified(sem.model)
+        is_table = not self.project._is_view_node(
+            sem.model
+        ) and spark.catalog.tableExists(src)
+        spec = {
+            "table": self.project.qualified(f"{name}__rollup"),
+            "schema": star_layout._schema_ddl(partials),
+            "source_fp": digest(listing),
+            "source_listing": listing,
+            "covers_paths": (
+                [star_layout._warehouse_path(spark, src)] if is_table else []
+            ),
+            "name": name,
+            "model": model,
+            "dims": dim_names,
+            "measures": kinds,
+            "grains": grains,
+            "casts": casts,
+            "fp_defs": self._rollup_defs_fp(sem, dim_names, kinds),
+        }
+        reaggs = []
+        for mn, kind in kinds.items():
+            if kind == "avg":  # the (sum, non-null count) pair re-sums
+                reaggs += [
+                    F.sum(c).alias(c) for c in (f"p_{mn}__sum", f"p_{mn}__cnt")
+                ]
+            else:
+                fn = _AGGS[_ROLLUP_REAGG[kind]]
+                reaggs.append(fn(f"p_{mn}").alias(f"p_{mn}"))
+        d = star_layout.Derived(
+            kind="semantic",
+            name=spec["table"],
+            version=1,
+            sources=(sem.model,),
+            derive=lambda t: self._rollup_partials(
+                sem, t[sem.model], dims, model
+            )[-1],
+            fold=lambda p: p.groupBy(*[f"d_{dn}" for dn in dim_names]).agg(
+                *reaggs
+            ),
         )
+        return d, spec, {sem.model: df}
+
+    def _register_rollup(self, spec: dict) -> Rollup:
+        """Register the rollup a lifecycle spec describes in this layer
+        (replacing any same-named entry on its model)."""
+        rollup = Rollup(
+            name=spec["name"],
+            model=spec["model"],
+            dims=tuple(spec["dims"]),
+            table=spec["table"],
+            measures=dict(spec["measures"]),
+            grains=dict(spec["grains"]),
+            fp_data=spec["source_fp"],
+            fp_defs=spec["fp_defs"],
+            casts=dict(spec["casts"]),
+        )
+        kept = [
+            r for r in self.rollups.get(rollup.model, [])
+            if r.name != rollup.name
+        ]
+        self.rollups[rollup.model] = kept + [rollup]
+        return rollup
 
     def _rollup_partials(
         self, sem: SemanticModel, df: DataFrame, dims: list[str], model: str
@@ -1054,153 +1145,6 @@ class SemanticLayer:
             df.groupBy(*group_cols).agg(*aggs),
         )
 
-    def _rollup_table_dir(self, table: str) -> str:
-        import os as _os
-        import re as _re
-
-        wh = _re.sub(
-            r"^file:",
-            "",
-            self.project.spark.conf.get("spark.sql.warehouse.dir"),
-        )
-        return _os.path.join(
-            wh,
-            table.lower().replace(".", ".db/", 1)
-            if "." in table
-            else table.lower(),
-        )
-
-    def _stamp_rollup(
-        self, table: str, spec: dict, listing: list[str]
-    ) -> None:
-        """Persist a rollup's metadata: TBLPROPERTIES (in-catalog
-        rediscovery), the spec sidecar (durable cross-session copy —
-        TBLPROPERTIES die with an in-memory catalog), and the source
-        file LISTING sidecar (what the append-only incremental refresh
-        diffs)."""
-        import json as _json
-
-        from .fingerprint import write_sidecar
-
-        spec_sql = _json.dumps(spec).replace("'", "''")
-        self.project.spark.sql(
-            f"ALTER TABLE {table} SET TBLPROPERTIES "
-            f"('dbt_analytics.rollup' = '{spec_sql}')"
-        )
-        try:
-            write_sidecar(self._rollup_table_dir(table), spec)
-            write_sidecar(
-                self._rollup_table_dir(table),
-                {"source_files": listing},
-                name=_ROLLUP_FILES_SIDECAR,
-            )
-        except OSError:
-            pass  # non-local warehouse: TBLPROPERTIES path still works
-
-    def _write_rollup(
-        self,
-        name: str,
-        model: str,
-        sem: SemanticModel,
-        df: DataFrame,
-        dims: list[str],
-        dim_names: list[str],
-        grains: dict[str, str],
-        kinds: dict[str, str],
-        casts: dict[str, str],
-        rollup_df: DataFrame,
-        reuse_existing: bool,
-    ) -> Rollup:
-        table = self.project.qualified(f"{name}__rollup")
-        spark = self.project.spark
-
-        from .fingerprint import (
-            data_fingerprint,
-            data_listing,
-            dir_is_complete,
-            read_sidecar,
-        )
-
-        # Staleness stamps, captured at build time: the source relation's
-        # file-listing digest and the dim/measure definition digest. Every
-        # later reuse / discover / route decision verifies BOTH — an
-        # incremental append to the fact or a YAML edit invalidates the
-        # rollup instead of silently serving stale partials.
-        listing = data_listing(df)
-        spec = {
-            "name": name,
-            "model": model,
-            "dims": dim_names,
-            "measures": kinds,
-            "grains": grains,
-            "casts": casts,
-            "fp_data": data_fingerprint(df),
-            "fp_defs": self._rollup_defs_fp(sem, dim_names, kinds),
-        }
-
-        _table_dir = lambda: self._rollup_table_dir(table)  # noqa: E731
-
-        build = True
-        if reuse_existing:
-            if spark.catalog.tableExists(table):
-                # Reuse only when the persisted spec (incl. both
-                # fingerprints) matches what THIS call would build —
-                # otherwise fall through and overwrite the stale table.
-                if self._read_rollup_spec(table) == spec:
-                    build = False
-            else:
-                # Same cross-session contract as the bucketed star layout
-                # (plans/star_layout.py): managed-table METADATA dies with
-                # the session's in-memory catalog but the FILES persist —
-                # re-register the existing files as an external table
-                # instead of rebuilding (and instead of leaving an orphan
-                # behind every session). Gated on (a) the _SUCCESS marker
-                # (a crashed partial write must never register as a
-                # complete table) and (b) the durable sidecar spec
-                # matching this call's spec exactly (a dims change under
-                # the same name must not read old files through a new
-                # schema as NULLs).
-                path = _table_dir()
-                if dir_is_complete(path) and read_sidecar(path) == spec:
-                    ddl = ", ".join(
-                        f"{f.name} {f.dataType.simpleString()}"
-                        for f in rollup_df.schema.fields
-                    )
-                    spark.sql(
-                        f"CREATE TABLE {table} ({ddl}) USING parquet "
-                        f"LOCATION '{path}'"
-                    )
-                    build = False
-        if build:
-            from .materialize import _save_as_table
-
-            # through the engine's CTAS path so a previous session's
-            # orphaned location heals (age-gated) instead of failing
-            # with LOCATION_ALREADY_EXISTS
-            _save_as_table(
-                self.project, rollup_df.write.mode("overwrite"), table
-            )
-        # Persist the spec ON the table (TBLPROPERTIES + durable
-        # sidecars) so a FUTURE session's layer can rediscover, verify,
-        # and incrementally refresh it — the registry below is in-memory
-        # and dies with this layer.
-        self._stamp_rollup(table, spec, listing)
-        rollup = Rollup(
-            name=name,
-            model=model,
-            dims=tuple(dim_names),
-            table=table,
-            measures=kinds,
-            grains=grains,
-            fp_data=spec["fp_data"],
-            fp_defs=spec["fp_defs"],
-            casts=casts,
-        )
-        kept = [r for r in self.rollups.get(model, []) if r.name != name]
-        kept.append(rollup)
-        self.rollups[model] = kept
-        return rollup
-
     def refresh_rollup(self, name: str, model: str) -> Rollup:
         """Refresh rollup ``name`` against the CURRENT source state.
 
@@ -1221,136 +1165,33 @@ class SemanticLayer:
         ``self.last_refresh_mode`` records 'noop' | 'incremental' |
         'rebuild'. Partial exactness is unchanged: sums/counts (and avg
         sum+count pairs) re-sum, min/max re-min/max, so the refreshed
-        table equals a from-scratch build bit-for-bit."""
-        from .fingerprint import data_fingerprint, data_listing, read_sidecar
+        table equals a from-scratch build bit-for-bit.
 
-        sem = self.models[model]
-        spark = self.project.spark
+        The lifecycle's refresh core (plans/star_layout.py ``_refresh``)
+        decides and folds: the stored sidecar's listing is diffed against
+        the current one, the merged partials are checkpointed, the old
+        table purged and the new one written with its sidecar last — a
+        crash at any point leaves nothing routable and degrades to a
+        rebuild."""
         rollup = next(
             (r for r in self.rollups.get(model, []) if r.name == name), None
         )
-        # reconstruct the original dims argument (dim or dim__grain)
-        dims_arg = (
-            [
-                f"{dn}__{rollup.grains[dn]}" if dn in rollup.grains else dn
-                for dn in rollup.dims
-            ]
-            if rollup is not None
-            else None
-        )
-
-        def _rebuild() -> Rollup:
-            self.last_refresh_mode = "rebuild"
-            return self.materialize_rollup(
-                name, model, dims_arg, reuse_existing=False
-            )
-
-        if rollup is None or dims_arg is None:
+        if rollup is None:
             raise KeyError(
                 f"rollup {name!r} on {model!r} is not registered — build "
                 "it with materialize_rollup() / discover_rollups() first"
             )
-        df = self.project._resolve_for_adhoc(sem.model)
-        cur_listing = data_listing(df)
-        cur_fp = data_fingerprint(df)
-        try:
-            defs_ok = rollup.fp_defs == self._rollup_defs_fp(
-                sem, rollup.dims, rollup.measures
-            )
-        except KeyError:
-            defs_ok = False
-        if not defs_ok:
-            return _rebuild()
-        if rollup.fp_data == cur_fp:
-            self.last_refresh_mode = "noop"
-            return rollup
-        # append-only detection: the relation must be a catalog TABLE
-        # (not a view/ephemeral whose inputs are upstream files — re-
-        # reading those raw would skip the view's logic) and every
-        # build-time file must still be present UNCHANGED.
-        files_sc = read_sidecar(
-            self._rollup_table_dir(rollup.table), _ROLLUP_FILES_SIDECAR
-        )
-        old_listing = (files_sc or {}).get("source_files")
-        is_table = not self.project._is_view_node(
-            sem.model
-        ) and spark.catalog.tableExists(self.project.qualified(sem.model))
-        if (
-            not is_table
-            or not old_listing
-            or any(e.startswith("mem:") for e in old_listing)
-            or not set(old_listing) < set(cur_listing)
-        ):
-            return _rebuild()
-        delta_paths = [
-            e.split("|", 1)[0]
-            for e in sorted(set(cur_listing) - set(old_listing))
+        # reconstruct the original dims argument (dim or dim__grain)
+        dims = [
+            f"{dn}__{rollup.grains[dn]}" if dn in rollup.grains else dn
+            for dn in rollup.dims
         ]
-        delta_df = spark.read.parquet(*delta_paths)
-        if delta_df.schema != df.schema:
-            return _rebuild()  # appended files under a changed schema
-        dim_names, grains, kinds, casts, delta_partials = (
-            self._rollup_partials(sem, delta_df, dims_arg, model)
+        d, spec, t = self._rollup_decl(name, model, dims)
+        status = star_layout._refresh(self.project.spark, d, spec, lambda: t)
+        self.last_refresh_mode = {"fresh": "noop", "rebuilt": "rebuild"}.get(
+            status, "incremental"
         )
-        if kinds != rollup.measures or casts != rollup.casts:
-            return _rebuild()
-        # fold: union the stored partials with the delta's and
-        # re-aggregate per kind — sums/counts/avg-pairs re-sum, min/max
-        # re-min/max; exactness identical to a from-scratch build
-        reaggs = []
-        for mn, kind in kinds.items():
-            if kind == "avg":
-                reaggs.append(F.sum(f"p_{mn}__sum").alias(f"p_{mn}__sum"))
-                reaggs.append(F.sum(f"p_{mn}__cnt").alias(f"p_{mn}__cnt"))
-            else:
-                fn = _AGGS[_ROLLUP_REAGG[kind]]
-                reaggs.append(fn(f"p_{mn}").alias(f"p_{mn}"))
-        merged = (
-            spark.table(rollup.table)
-            .unionByName(delta_partials)
-            .groupBy(*[f"d_{dn}" for dn in dim_names])
-            .agg(*reaggs)
-        )
-        from .materialize import _save_as_table
-
-        # two-step swap: Spark cannot overwrite a table it is reading,
-        # so stage the merged frame first (both frames are output-grain-
-        # sized — tiny next to the fact either way)
-        staging = f"{rollup.table}__refreshing"
-        _save_as_table(self.project, merged.write.mode("overwrite"), staging)
-        _save_as_table(
-            self.project,
-            spark.table(staging).write.mode("overwrite"),
-            rollup.table,
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        spec = {
-            "name": name,
-            "model": model,
-            "dims": list(rollup.dims),
-            "measures": kinds,
-            "grains": grains,
-            "casts": casts,
-            "fp_data": cur_fp,
-            "fp_defs": rollup.fp_defs,
-        }
-        self._stamp_rollup(rollup.table, spec, cur_listing)
-        fresh = Rollup(
-            name=name,
-            model=model,
-            dims=rollup.dims,
-            table=rollup.table,
-            measures=kinds,
-            grains=grains,
-            fp_data=cur_fp,
-            fp_defs=rollup.fp_defs,
-            casts=casts,
-        )
-        kept = [r for r in self.rollups.get(model, []) if r.name != name]
-        kept.append(fresh)
-        self.rollups[model] = kept
-        self.last_refresh_mode = "incremental"
-        return fresh
+        return self._register_rollup(spec)
 
     def _rollup_defs_fp(
         self, sem: SemanticModel, dim_names, measure_kinds
@@ -1371,54 +1212,40 @@ class SemanticLayer:
             meas[mn] = [ms.agg, ms.expr or (mn if ms.agg != "count" else "1")]
         return defs_fingerprint({"dims": dims, "measures": meas})
 
-    def _read_rollup_spec(self, table: str) -> dict | None:
-        """The ``dbt_analytics.rollup`` TBLPROPERTIES spec of ``table``,
-        or None when absent/unparseable."""
-        import json as _json
-
-        try:
-            rows = self.project.spark.sql(
-                f"SHOW TBLPROPERTIES {table} ('dbt_analytics.rollup')"
-            ).collect()
-        except Exception:
-            return None
-        if not rows or "does not have property" in (rows[0][-1] or ""):
-            return None
-        try:
-            return _json.loads(rows[0]["value"])
-        except (ValueError, KeyError):
-            return None
-
     def discover_rollups(self) -> int:
-        """Re-register rollups built by PREVIOUS sessions: scan the
-        current database for ``*__rollup`` tables carrying the
-        ``dbt_analytics.rollup`` property and register every one whose
-        semantic model this layer knows AND whose definition fingerprint
-        still matches the current YAML (a rollup whose dim/measure exprs
-        drifted is skipped with a warning — its partials no longer mean
-        what the query would assume). Source-DATA freshness is verified
-        per query in _route_rollup, since the fact can change after
-        discovery. Returns the number registered. The CLI calls this
-        before ``sl query`` so ``sl rollup`` in one invocation
+        """Re-register rollups built by PREVIOUS sessions: read every
+        ``*__rollup`` sidecar in the project database's warehouse
+        directory and register each one whose semantic model this layer
+        knows AND whose definitions fingerprint still matches the current
+        YAML (a rollup whose dim/measure exprs drifted is skipped with a
+        warning — its partials no longer mean what the query would
+        assume). The files re-register in the catalog through the
+        lifecycle's ``register``; a pending sidecar or an incomplete write
+        registers with no data fingerprint, so it never routes and the
+        next ``refresh_rollup`` rebuilds it. Source-DATA freshness is
+        verified per query in _route_rollup, since the fact can change
+        after discovery. Returns the number registered. The CLI calls
+        this before ``sl query`` so ``sl rollup`` in one invocation
         accelerates queries in every later one."""
         import warnings
 
         spark = self.project.spark
+        db_dir = star_layout._warehouse_path(
+            spark, self.project.qualified("")
+        )
+        if not os.path.isdir(db_dir):
+            return 0
+        if self.project.database:
+            # a new session's in-memory catalog knows no databases
+            spark.sql(f"CREATE DATABASE IF NOT EXISTS {self.project.database}")
         n = 0
-        for t in spark.catalog.listTables(
-            self.project.database or None
-        ):
-            if not t.name.endswith("__rollup"):
+        for entry in sorted(os.listdir(db_dir)):
+            if not entry.endswith("__rollup"):
                 continue
-            full = (
-                f"{t.namespace[0]}.{t.name}"
-                if getattr(t, "namespace", None)
-                else t.name
+            spec = read_sidecar(
+                os.path.join(db_dir, entry), star_layout.LAYOUT_SIDECAR
             )
-            spec = self._read_rollup_spec(full)
-            if spec is None:
-                continue
-            sem = self.models.get(spec.get("model"))
+            sem = self.models.get(spec["model"]) if spec else None
             if sem is None:
                 continue
             try:
@@ -1427,32 +1254,17 @@ class SemanticLayer:
                 )
             except KeyError:
                 cur_defs = None  # a dim/measure no longer exists
-            if spec.get("fp_defs") != cur_defs or cur_defs is None:
+            if spec["fp_defs"] != cur_defs:
                 warnings.warn(
-                    f"rollup {spec.get('name')!r} ({full}): dimension/"
+                    f"rollup {spec['name']!r} ({spec['table']}): dimension/"
                     "measure definitions changed since it was built; "
                     "skipping — rebuild with sl rollup",
                     stacklevel=2,
                 )
                 continue
-            rollup = Rollup(
-                name=spec["name"],
-                model=spec["model"],
-                dims=tuple(spec["dims"]),
-                table=full,
-                measures=dict(spec["measures"]),
-                grains=dict(spec.get("grains", {})),
-                fp_data=spec.get("fp_data"),
-                fp_defs=spec.get("fp_defs"),
-                casts=dict(spec.get("casts", {})),
-            )
-            kept = [
-                r
-                for r in self.rollups.get(rollup.model, [])
-                if r.name != rollup.name
-            ]
-            kept.append(rollup)
-            self.rollups[rollup.model] = kept
+            if spec.get("pending") or not star_layout.register(spark, spec):
+                spec = {**spec, "source_fp": None}
+            self._register_rollup(spec)
             n += 1
         return n
 

@@ -37,6 +37,14 @@ model through one materialization:
   and rebuilds on anything else.
 - :func:`register` is the one re-registration of persisted files.
 
+The semantic layer's rollups (plans/semantics.py ``Rollup``) run through the
+same lifecycle: each is a ``Derived`` declared at call time over the
+semantic model's relation, its spec built from that relation's file
+listing, and ``materialize_rollup`` / ``refresh_rollup`` /
+``discover_rollups`` are :func:`_ensure` / :func:`_refresh` /
+:func:`register` over it — one sidecar name and one table-to-directory
+mapping (:func:`_warehouse_path`) serve every derived table.
+
 Verified reuse never constructs a frame or analyzes a plan: the ad-hoc
 bench re-verifies layouts per query, and per-call schema analysis was the
 r15 j1b regression's root cause. Derived schemas are cached per (app id,
@@ -45,7 +53,6 @@ table, source fingerprint).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
 import shutil
@@ -180,8 +187,13 @@ def _schema_ddl(df: DataFrame) -> str:
 
 
 def _warehouse_path(spark: SparkSession, table: str) -> str:
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    return os.path.join(re.sub(r"^file:", "", wh), table.lower())
+    """The directory of managed table ``table``: ``<warehouse>/<table>``,
+    or ``<warehouse>/<db>.db/<table>`` when qualified by a database other
+    than ``default`` (an empty name gives the database's directory)."""
+    db, _, name = table.lower().rpartition(".")
+    wh = re.sub(r"^file:", "", spark.conf.get("spark.sql.warehouse.dir"))
+    db_dir = f"{db}.db" if db not in ("", "default") else ""
+    return os.path.join(wh, db_dir, name)
 
 
 def _source_paths(sf_dir: str, names: tuple[str, ...]) -> list[str]:
@@ -218,7 +230,7 @@ def _spec(
     table = d.table(sf_dir, n_buckets)
     paths = _source_paths(sf_dir, d.sources)
     listing = fingerprint.files_listing(paths)
-    fp = hashlib.md5("\n".join(listing).encode()).hexdigest()
+    fp = fingerprint.digest(listing)
     schema, columns = d.schema, None
     if schema is None or d.covers:
         key = (spark.sparkContext.applicationId, table, fp)
@@ -381,8 +393,8 @@ def _ensure(
 def refresh(
     spark: SparkSession, d: Derived, sf_dir: str, n_buckets: int = N_BUCKETS
 ) -> str:
-    """Incremental refresh — the layout twin of the semantic layer's
-    ``refresh_rollup`` (plans/semantics.py): an APPEND-ONLY growth of the
+    """Incremental refresh (the semantic layer's ``refresh_rollup`` runs
+    the same :func:`_refresh` core): an APPEND-ONLY growth of the
     covered source runs only the delta files through ``derive`` instead
     of paying the full rebuild (155.8 s at 240M rows,
     BENCH_SCANFLOOR_r13). Identity tables append the delta as extra
@@ -410,16 +422,34 @@ def refresh(
         (spark.sparkContext.applicationId, os.path.abspath(sf_dir)), None
     )
     spec = _spec(spark, d, sf_dir, n_buckets)
+    return _refresh(spark, d, spec, lambda: load_testdata(spark, sf_dir))
+
+
+def _refresh(
+    spark: SparkSession,
+    d: Derived,
+    spec: dict,
+    frames: Callable[[], dict[str, DataFrame]],
+) -> str:
+    """The refresh core over ``spec`` (the CURRENT contract) and the
+    current source frames: the stored sidecar's listing is diffed
+    against the spec's, and the appended files of ``d.sources[0]`` run
+    through ``derive``. A delta whose schema differs from the source
+    frame's rebuilds."""
     path = _warehouse_path(spark, spec["table"])
     old = fingerprint.read_sidecar(path, LAYOUT_SIDECAR)
     if old == spec and register(spark, spec):
         return "fresh"
+    t = frames()
     delta = _append_only_delta(old, spec)
-    t = load_testdata(spark, sf_dir)
+    if delta is not None:
+        src = _read_like_engine(spark, delta)
+        if src.schema != t[d.sources[0]].schema:
+            delta = None  # appended files under a changed schema
     if delta is None or not register(spark, old):
         status = _ensure(spark, d, spec, lambda: t)
         return status if status.startswith("refused") else "rebuilt"
-    part = d.derive({**t, d.sources[0]: _read_like_engine(spark, delta)})
+    part = d.derive({**t, d.sources[0]: src})
     try:
         if d.fold is None:
             fingerprint.write_sidecar(

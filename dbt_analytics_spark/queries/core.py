@@ -1213,12 +1213,7 @@ GROUP BY sla_class
 # ---------------------------------------------------------------------------
 
 def g1_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.star_layout import (
-        MONTHLY_ROLLUP,
-        ROUTE_MIN_FACT_BYTES,
-        guarded_cents_spend,
-        route,
-    )
+    from ..plans.star_layout import MONTHLY_ROLLUP, guarded_cents_spend, route
 
     # Aggregate awareness (round 16): the whole 15M-row monthly
     # aggregate precomputed as ~80 re-foldable partials
@@ -1236,44 +1231,6 @@ def g1_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
             guarded_cents_spend(
                 F.col("cnt"), F.col("cents"), F.col("mx"), F.col("mn")
             ).alias("spend"),
-        )
-    elif table_disk_bytes(sf_dir, "orders") < ROUTE_MIN_FACT_BYTES:
-        # Round 17 (VERDICT r16 item 1): below the same fact-size gate
-        # that turns the rollup route off, the r16 gap-fill's fixed cost
-        # (global window + sequence/explode) LOSES to the r15 two-scan
-        # shape on the count series — measured interleaved at sf0.1:
-        # two-scan 0.152 s vs gap-fill 0.204 s min-of-5 (the driver saw
-        # the same 0.161 -> 0.206 regression). A second scan of a
-        # <32 MB fact is noise; the spine join broadcasts a ~80-row
-        # relation. Above the gate the single-scan gap-fill stands (at
-        # sf10 it took g1 exec 1.34 -> 0.19 s — the r16 win), and the
-        # rollup route covers the provisioned-warehouse case anyway.
-        # Integer-cents sum kept identical to the branches below (the
-        # bit-exactness argument is scale-independent).
-        o = load_testdata(spark, sf_dir)["orders"]
-        bounds = o.agg(
-            F.date_trunc("month", F.min("o_orderdate")).cast("date").alias("lo"),
-            F.date_trunc("month", F.max("o_orderdate")).cast("date").alias("hi"),
-        )
-        spine = bounds.select(
-            F.explode(
-                F.sequence("lo", "hi", F.expr("interval 1 month"))
-            ).alias("month_start")
-        )
-        cents = (_money(F.col("o_totalprice")) * 100).cast("long")
-        monthly = o.groupBy(
-            date_trunc_pg("month", "o_orderdate").alias("month_start")
-        ).agg(
-            F.count(F.lit(1)).alias("cnt"),
-            (F.sum(cents).cast("decimal(38,0)") / F.lit(100))
-            .cast("double")
-            .alias("spend"),
-        )
-        return spine.join(monthly, "month_start", "left").select(
-            "month_start",
-            F.last_day("month_start").alias("month_end"),
-            F.coalesce(F.col("cnt"), F.lit(0)).alias("n_orders"),
-            F.coalesce(F.col("spend"), F.lit(0.0)).alias("total_spend"),
         )
     else:
         o = load_testdata(spark, sf_dir)["orders"]
@@ -1325,6 +1282,10 @@ def g1_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate, and strictly less data than the removed exchange's input.
     # Driver-bench effect at sf0.1: the r16 gap-fill's ~45 ms fixed-cost
     # regression (VERDICT r16 item 1) comes back under the r15 number.
+    # Small facts take this shape too: a two-scan spine join below 32 MB
+    # was no faster under full execution (perfbench adhoc_mix at sf0.02,
+    # 8 seeds on 4 cores, build+exec medians 0.654 s two-scan vs 0.589 s
+    # gap-fill).
     w = Window.orderBy("month_start")
     return (
         monthly.coalesce(1).withColumn("nxt", F.lead("month_start").over(w))

@@ -156,6 +156,31 @@ def test_registered_filtered_source_falls_back_end_to_end(spark, sf_copy):
     assert layout_catalog.route_source(spark, customer) is not None
 
 
+@pytest.mark.parametrize(
+    "error, falls_back", [(OSError, True), (KeyError, False)]
+)
+def test_registry_route_fallback_only_on_expected_errors(
+    spark, sf_copy, monkeypatch, error, falls_back
+):
+    """The registry falls back to the raw scan only on the errors routing
+    expects (JVM, Spark, filesystem); a defect inside route_source — the
+    ``KeyError: 'bucket_col'`` a broad handler once hid — surfaces when a
+    source node compiles."""
+    p = _user_project(spark, sf_copy)
+
+    def broken(spark, df):
+        raise error("bucket_col")
+
+    monkeypatch.setattr(layout_catalog, "route_source", broken)
+    if falls_back:
+        assert p.compile_node("orders").count() == p.nodes["orders"].fn(
+            None
+        ).count()
+    else:
+        with pytest.raises(KeyError, match="bucket_col"):
+            p.compile_node("orders")
+
+
 def test_route_source_respects_fact_size_gate(spark, sf_copy, monkeypatch):
     star_layout.ensure_star_layout(spark, sf_copy)
     orders = spark.read.parquet(os.path.join(sf_copy, "orders.parquet"))

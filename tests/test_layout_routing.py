@@ -615,24 +615,14 @@ def test_custdist_refresh_refuses_dangling_delta(spark, tmp_path):
     assert sorted(map(tuple, q13(spark, d).collect())) == routed
 
 
-def test_g1_small_fact_shape_matches_gap_fill(spark, monkeypatch):
-    """Round 17: g1's raw path is fact-size gated — below
-    ROUTE_MIN_FACT_BYTES the two-scan spine-join shape (count-series
-    cheaper at fixed-cost scale), above it the single-scan gap-fill
-    (scan-dominated scale). Pin: the two shapes are row-identical on the
-    same data, the small shape really is the spine JOIN, and the large
-    shape really is join-free with ONE orders scan."""
+def test_g1_raw_path_is_single_scan_gap_fill(spark, monkeypatch):
+    """g1's raw path has one shape at every fact size: the single-scan
+    gap-fill (no spine join, ONE orders scan), also below
+    ROUTE_MIN_FACT_BYTES where the rollup route is shut, and its rows
+    equal the routed answer's (test_monthly_rollup_routes_g1_and_matches_raw
+    pins those against each other)."""
     g1 = REGISTRY["g1_date_spine"][0]
-    # the autouse fixture pins the gate OPEN (0) -> gap-fill branch
-    assert star_layout.ROUTE_MIN_FACT_BYTES == 0
-    gap = g1(spark, SF)
-    gap_plan = gap._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" not in gap_plan
-    assert gap_plan.count("Relation") == 1  # ONE orders scan
-    gap_rows = sorted(map(tuple, gap.collect()))
-
     monkeypatch.setattr(star_layout, "ROUTE_MIN_FACT_BYTES", 1 << 60)
-    small = g1(spark, SF)
-    small_plan = small._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" in small_plan
-    assert sorted(map(tuple, small.collect())) == gap_rows
+    plan = g1(spark, SF)._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan
+    assert plan.count("Relation") == 1  # ONE orders scan

@@ -12,7 +12,8 @@ import os
 import pytest
 import yaml
 
-from dbt_analytics_spark.plans import Project
+from dbt_analytics_spark.plans import Project, fingerprint, star_layout
+from dbt_analytics_spark.plans.fingerprint import read_sidecar, write_sidecar
 from dbt_analytics_spark.plans.semantics import SemanticLayer
 
 DOC = yaml.safe_load(
@@ -2195,6 +2196,31 @@ def test_rollup_files_reuse_rejects_spec_mismatch(spark, fact_path):
         spark.conf.unset("spark.dbt_analytics.orphanHealMinAgeSeconds")
 
 
+def test_rollup_discovered_after_dead_session_routes(spark, fact_path):
+    """The catalog is in memory, so a rollup built by one process is
+    known to the next only through its warehouse files: a NEW layer's
+    discovery reads the sidecar, re-registers the files and routes."""
+    _orphan_rollup_files(spark, fact_path, drop_success=False)
+    _, lay2 = _file_layer(spark, fact_path)
+    assert lay2.discover_rollups() == 1
+    rows = _rows(lay2.query(["revenue"], group_by=["seg"]))
+    assert lay2.last_rollup_used == "rus"
+    assert rows == [("a", 30.0), ("b", 5.0)]
+
+
+def test_rollup_sidecar_write_failure_raises(spark, fact_path, monkeypatch):
+    """A rollup whose sidecar cannot be written is unknown to every later
+    session, so the build must fail loudly, not return normally."""
+
+    def unwritable(*args, **kwargs):
+        raise OSError("read-only warehouse")
+
+    monkeypatch.setattr(fingerprint, "write_sidecar", unwritable)
+    _, lay = _file_layer(spark, fact_path)
+    with pytest.raises(OSError, match="read-only"):
+        lay.materialize_rollup("rus", "txns", ["seg"])
+
+
 def test_rollup_avg_measure_routes_and_matches_fact(spark, fact_path):
     """avg decomposes into (sum, non-null count) partials re-divided at
     query time — the routed answer must be IDENTICAL to the fact-grain
@@ -2372,3 +2398,62 @@ def test_refresh_unknown_rollup_raises(table_layer):
     _, lay = table_layer
     with pytest.raises(KeyError, match="not registered"):
         lay.refresh_rollup("nope", "txns")
+
+
+# Crash safety of the rollup refresh (the tests/test_layout_lifecycle.py
+# cases, through the semantic layer): the route refuses and the next
+# refresh rebuilds rows equal to a fresh build.
+
+
+def _assert_rebuilds_like_fresh(spark, lay, dims):
+    lay.refresh_rollup("rfr", "txns")
+    assert lay.last_refresh_mode == "rebuild"
+    lay.query(["revenue"], group_by=["seg"]).collect()
+    assert lay.last_rollup_used == "rfr"
+    fresh = lay.materialize_rollup("rfr2", "txns", dims)
+    assert _rows(spark.table("rfr__rollup")) == _rows(spark.table(fresh.table))
+
+
+def test_rollup_pending_sidecar_refuses_route_and_rebuilds(table_layer):
+    spark, lay = table_layer
+    r = lay.materialize_rollup("rfr", "txns", ["seg"])
+    path = star_layout._warehouse_path(spark, r.table)
+    spec = read_sidecar(path, star_layout.LAYOUT_SIDECAR)
+    write_sidecar(
+        path, {**spec, "pending": True}, star_layout.LAYOUT_SIDECAR
+    )
+    lay.rollups.clear()  # a later session knows only the warehouse
+    assert lay.discover_rollups() == 1
+    with pytest.warns(UserWarning, match="stale"):
+        lay.query(["revenue"], group_by=["seg"]).collect()
+    assert lay.last_rollup_used is None
+    _assert_rebuilds_like_fresh(spark, lay, ["seg"])
+
+
+def test_rollup_failed_fold_write_refuses_route_and_rebuilds(
+    table_layer, monkeypatch
+):
+    spark, lay = table_layer
+    dims = ["seg", "day__month"]
+    r = lay.materialize_rollup("rfr", "txns", dims)
+    path = star_layout._warehouse_path(spark, r.table)
+    _txn_df(spark, [(4, "b", 7.0, "2025-02-02")]).write.mode(
+        "append"
+    ).saveAsTable("txns_model")
+    # the refresh below takes the fold path, not a rebuild
+    old = read_sidecar(path, star_layout.LAYOUT_SIDECAR)
+    spec = lay._rollup_decl("rfr", "txns", dims)[1]
+    assert star_layout._append_only_delta(old, spec) is not None
+
+    def crash(*args):
+        raise RuntimeError("injected write failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(star_layout, "_write", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            lay.refresh_rollup("rfr", "txns")
+    assert read_sidecar(path, star_layout.LAYOUT_SIDECAR) is None
+    with pytest.warns(UserWarning, match="stale"):
+        lay.query(["revenue"], group_by=["seg"]).collect()
+    assert lay.last_rollup_used is None
+    _assert_rebuilds_like_fresh(spark, lay, dims)
