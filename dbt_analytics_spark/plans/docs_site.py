@@ -126,9 +126,12 @@ def write_docs_site(project: "Project", out_dir: str) -> str:
     os.makedirs(out_dir, exist_ok=True)
     manifest_path = os.path.join(out_dir, "manifest.json")
     project.write_manifest(manifest_path)
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+
     try:
         project.write_catalog(os.path.join(out_dir, "catalog.json"))
-    except Exception:
+    except (Py4JError, PySparkException):
         pass  # catalog requires a live session with materialized relations
 
     with open(manifest_path) as f:

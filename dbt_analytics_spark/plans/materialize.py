@@ -34,6 +34,9 @@ if TYPE_CHECKING:
 # Serializes dynamic-partition-overwrite writes (see _apply_incremental).
 _PARTITION_OVERWRITE_LOCK = threading.Lock()
 
+# Incremental strategies run by an ingest core (plans/ingest.py).
+_INGEST = ("dedup_insert", "ivf_insert")
+
 
 # Directories younger than this are treated as possibly another process's
 # in-flight CTAS (directory written, catalog not yet updated) and are NOT
@@ -173,26 +176,11 @@ def materialize(project: "Project", node: "Node", df: DataFrame) -> int | None:
     # materialized_view.sql — create/refresh/replace lifecycle).
     if kind == "incremental" and node.incremental_strategy == "microbatch":
         return _apply_microbatch(project, node, df)
+    if kind == "incremental" and node.incremental_strategy in _INGEST:
+        return _apply_ingest(project, node, df)
     if kind in ("table", "materialized_view") or (
         kind == "incremental" and not _incremental_applies(project, node)
     ):
-        if kind == "incremental" and node.incremental_strategy == "dedup_insert":
-            # Initial build / full refresh: any companion LSH index from a
-            # previous life is stale — drop it so the next incremental run
-            # bootstraps a fresh one from the rebuilt corpus.
-            for suffix in ("__lsh_shingles", "__lsh_bands", "__dedup_fps"):
-                project.spark.sql(
-                    f"DROP TABLE IF EXISTS {project.qualified(node.name + suffix)}"
-                )
-        if kind == "incremental" and node.incremental_strategy == "ivf_insert":
-            # Initial build / full refresh: commit markers from a previous
-            # life would fast-path-skip a future batch whose key set
-            # happens to match one of theirs — drop them with the corpus.
-            project.spark.sql(
-                f"DROP TABLE IF EXISTS "
-                f"{project.qualified(node.name + '__ivf_commits')}"
-            )
-            return _ivf_initial_build(project, node, df)
         if node.zorder_by:
             # Z-order clustering (operators/zorder.py): layout-only —
             # rows are globally ordered along the Morton curve of the
@@ -485,194 +473,77 @@ def _apply_partition_pruned_merge(
     return spark.table(target).count()
 
 
-def _ivf_parts(node: "Node") -> tuple[str, ...]:
-    """Physical partition spec of an ivf_insert target: the user's
-    partition columns, then the cell — identical at initial build and
-    every append (a mismatched spec would corrupt the layout)."""
-    return (*node.partition_by, "__ivf_cell")
-
-
-def _ivf_initial_build(project: "Project", node: "Node", df: DataFrame) -> None:
-    """Initial build / full refresh of an ``ivf_insert`` target: train the
-    IVF centroids ONCE (RNG-free — deterministic hash-ordered sample, plus
-    optional Lloyd iterations), persist them to ``{name}__ivf_centroids``,
-    and write the corpus with its cell id as a PARTITION column so probes
-    get physical partition pruning (operators/similarity.py:
-    ivf_index_topk) — the 100 TB ANN shape: a probe reads
-    ~n_probe/n_cells of the data, and later batches index themselves
-    against the pinned centroids without ever re-training or re-scanning
-    the corpus (cost ∝ batch).
-
-    Durability order: centroids commit BEFORE the target. A crash in
-    between leaves a centroid table the retry simply overwrites — and
-    training is deterministic, so the rewrite is bit-identical; the
-    reverse order could commit a corpus with no model to index new
-    batches against. Re-training (new n_cells, fresher centroids) is a
-    full refresh by design — cells are part of the table's physical
-    contract, exactly like a bucket count.
-    """
-    import numpy as np
-
-    from ..operators import similarity as _sim
+def _apply_ingest(project: "Project", node: "Node", df: DataFrame) -> int | None:
+    """``dedup_insert`` / ``ivf_insert``: one call of the strategy's
+    ingest core (plans/ingest.py), the same code the streaming ingests
+    run per micro-batch. The initial build bootstraps the target and its
+    companions from this run's rows; a full refresh drops the target, its
+    companions and its replay marker first, so ``ivf_insert`` retrains
+    and ``dedup_insert`` re-indexes the rebuilt corpus. Ingest targets
+    are append-only: a batch whose columns differ conforms to the stored
+    ones (``ignore``/``fail``), and a widening policy needs a full
+    refresh. ``ivf_insert`` ignores drift (the stored columns win)."""
+    from . import ingest
 
     spark = project.spark
+    target = project.qualified(node.name)
+    strategy = node.incremental_strategy
     if not node.unique_key:
-        raise ValueError(f"ivf_insert strategy requires unique_key on {node.name}")
-    vec = node.ivf_vec_col
-    if vec not in df.columns:
+        raise ValueError(f"{strategy} strategy requires unique_key on {node.name}")
+    if node.bucket_by or node.zorder_by:
         raise ValueError(
-            f"ivf_insert: embedding column {vec!r} not in {node.name}"
+            f"{node.name}: {strategy} appends in place and keeps no "
+            "bucket_by/zorder_by layout"
         )
-    kw = dict(node.ivf_kwargs or {})
-    n_cells = int(kw.get("n_cells", 16))
-    iters = int(kw.get("kmeans_iters", 0))
-    vecs = df.filter(F.col(vec).isNotNull())
-    if iters > 0:
-        C, _ = _sim.kmeans_fit(
-            vecs, node.unique_key, vec, n_cells=n_cells, max_iter=iters
+    if project.full_refresh:
+        ingest._drop(spark, (target, *ingest.companions(target, strategy)))
+    incremental = _incremental_applies(project, node)
+    if strategy == "ivf_insert":
+        kw = node.ivf_kwargs or {}
+        ingest.ivf_ingest(
+            spark,
+            target,
+            df,
+            node.unique_key,
+            node.ivf_vec_col,
+            n_cells=int(kw.get("n_cells", 16)),
+            kmeans_iters=int(kw.get("kmeans_iters", 0)),
+            partition_by=(*node.partition_by, "__ivf_cell"),
+            file_format=node.file_format,
         )
     else:
-        C = _sim._sample_centroids(vecs, node.unique_key, vec, n_cells)
-    cent_tbl = project.qualified(f"{node.name}__ivf_centroids")
-    _save_as_table(
-        project,
-        spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(np.asarray(C))],
-            "cell int, centroid array<double>",
-        ).write.mode("overwrite").format(node.file_format),
-        cent_tbl,
-    )
-    out = df.withColumn(
-        "__ivf_cell", _sim.ivf_cell_udf(C)(_sim.as_double_array(F.col(vec)))
-    )
-    _save_as_table(
-        project,
-        out.write.mode("overwrite")
-        .format(node.file_format)
-        .partitionBy(*_ivf_parts(node)),
-        project.qualified(node.name),
-    )
-    return None
-
-
-def _batch_key_fingerprint(df: DataFrame, key: str) -> tuple[int, str, str]:
-    """Content identity of a batch's key set: (count, two independent
-    60-bit md5-chunk sums in decimal — order-free, overflow-free to
-    ~10^18 rows). Deterministic across runs/engines (md5 over the string
-    key), so a re-run of the same model batch reproduces it exactly. One
-    batch-sized aggregate; never touches the corpus."""
-    h = F.md5(F.col(key).cast("string"))
-    r = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.conv(F.substring(h, 1, 15), 16, 10).cast("decimal(38,0)")
-        ).alias("h1"),
-        F.sum(
-            F.conv(F.substring(h, 17, 15), 16, 10).cast("decimal(38,0)")
-        ).alias("h2"),
-    ).collect()[0]
-    return int(r["n"]), str(r["h1"]), str(r["h2"])
-
-
-def _apply_ivf_insert(
-    project: "Project", node: "Node", existing: DataFrame, new_rows: DataFrame
-) -> int:
-    """Incremental ANN index maintenance: assign the batch to the PINNED
-    centroids (broadcast-sized model in the UDF closure) and append it
-    into the cell-partitioned target — one Arrow pass over the batch plus
-    one partitioned append; the corpus is never re-scanned or re-trained.
-    The anti-join on the unique key makes a re-emitted batch (crash after
-    the append committed) a no-op, and because the cell rides IN the
-    target row there is no separate index table to drift out of sync —
-    the dual-commit healing machinery dedup_insert needs does not apply.
-    (The centroid companion is written once at initial build and only
-    read here.)
-
-    Replay fast path (the batch analog of stream_dedup_ingest's
-    ``(query_id, batch_id)`` marker — batch runs have no durable batch
-    id, so the marker keys on the batch's CONTENT fingerprint): a
-    committed batch records its key-set fingerprint in
-    ``{name}__ivf_commits``; a re-run of the same batch matches the
-    marker and returns before the anti-join, replacing the guard's
-    corpus-id-column scan (the measured growth term in
-    ivf_scale_probe.out) with one batch-sized aggregate plus a tiny
-    marker lookup. The marker commits strictly AFTER the append, so a
-    crash between the two only costs the fast path, never correctness —
-    the replay falls back to the guarded anti-join, inserts nothing, and
-    re-writes the marker."""
-    import numpy as np
-
-    spark = project.spark
-    from ..operators import similarity as _sim
-
-    target = project.qualified(node.name)
-    cent_tbl = project.qualified(f"{node.name}__ivf_centroids")
-    if not spark.catalog.tableExists(cent_tbl):
-        raise ValueError(
-            f"ivf_insert: centroid table {cent_tbl} is missing — the model "
-            f"cannot be reconstructed from the corpus (training data is "
-            f"gone); run a full refresh to re-index {node.name}"
-        )
-    key = node.unique_key
-    batch = new_rows.dropDuplicates([key])
-    marker_tbl = project.qualified(f"{node.name}__ivf_commits")
-    n_b, h1, h2 = _batch_key_fingerprint(batch, key)
-    if n_b > 0 and spark.catalog.tableExists(marker_tbl):
-        hit = (
-            spark.table(marker_tbl)
-            .filter(
-                (F.col("n") == n_b)
-                & (F.col("h1") == h1)
-                & (F.col("h2") == h2)
+        kw = dict(node.dedup_kwargs or {}, file_format=node.file_format)
+        if incremental:
+            existing = project.read_relation(node.name)
+            if node.on_schema_change in (
+                "append_new_columns",
+                "sync_all_columns",
+            ) and set(existing.columns) != set(df.columns):
+                raise ValueError(
+                    f"{node.name}: {strategy} targets are append-only, so "
+                    f"on_schema_change={node.on_schema_change!r} cannot "
+                    "change their columns — run a full refresh"
+                )
+            df = _align_schema_drift(node, existing, df)[1]
+            ingest.dedup_heal(
+                spark, target, node.unique_key, node.dedup_text_col, **kw
             )
-            .limit(1)
-            .count()
+        ingest.dedup_ingest(
+            spark,
+            target,
+            df,
+            node.unique_key,
+            node.dedup_text_col,
+            partition_by=tuple(node.partition_by),
+            **kw,
         )
-        if hit:
-            return spark.table(target).count()
-
-    rows = spark.table(cent_tbl).orderBy("cell").collect()
-    C = np.asarray([list(r["centroid"]) for r in rows], dtype=np.float64)
-    # Within-batch key dedup happened above (a batch carrying the same id
-    # twice would otherwise append both); now the cross-run retry guard.
-    fresh = batch.join(existing.select(key), key, "left_anti")
-    assigned = fresh.withColumn(
-        "__ivf_cell",
-        _sim.ivf_cell_udf(C)(_sim.as_double_array(F.col(node.ivf_vec_col))),
-    )
-    stored_cols = spark.table(target).columns
-    # The plan reads the target (anti-join) and the write appends to it —
-    # cut lineage first, exactly like dedup_insert's survivors.
-    assigned = assigned.select(*stored_cols).localCheckpoint(eager=True)
-    (
-        assigned.write.mode("append")
-        .format(node.file_format)
-        .partitionBy(*_ivf_parts(node))
-        .saveAsTable(target)
-    )
-    spark.catalog.refreshTable(target)
-    if n_b > 0:
-        # Marker AFTER the data commit (see docstring: a crash between
-        # the two only loses the fast path, never rows). Always parquet —
-        # streaming's _mark() appends to the SAME table, so pinning the
-        # node's file_format here would break the either-path-fast-paths-
-        # the-other contract for non-parquet nodes with a format-mismatch
-        # error on the cross-path append.
-        spark.createDataFrame(
-            [(n_b, h1, h2)], "n long, h1 string, h2 string"
-        ).write.mode("append").format("parquet").saveAsTable(marker_tbl)
-    return spark.table(target).count()
+    return spark.table(target).count() if incremental else None
 
 
 def _apply_incremental(project: "Project", node: "Node", new_rows: DataFrame) -> int:
     target = project.qualified(node.name)
     existing = project.read_relation(node.name)
     strategy = node.incremental_strategy
-    if strategy == "ivf_insert":
-        # Dispatch before the schema-drift align: the stored __ivf_cell
-        # column is engine-owned (the batch gains it here), not drift.
-        return _apply_ivf_insert(project, node, existing, new_rows)
-    post_commit = None  # dedup_insert defers companion-table writes here
 
     # Partition-pruned merge (below) also publishes via insertInto, which
     # is positional against the STORED table schema — same constraint as
@@ -753,178 +624,6 @@ def _apply_incremental(project: "Project", node: "Node", new_rows: DataFrame) ->
         # Additive schema-change policies widened the target: fall through
         # to the full restatement with the new column set.
         combined = existing.unionByName(new_rows)
-    elif strategy == "dedup_insert":
-        # Ingest-time corpus hygiene: drop batch rows that EXACTLY match an
-        # existing row's text fingerprint, then drop near-duplicates of the
-        # existing corpus (MinHash-LSH cross banding — candidate volume
-        # scales with the BATCH, not the corpus; operators/dedup.py:
-        # dedup_against_corpus), then append the survivors. The incremental
-        # analogue of dd8's clean-corpus materialization: each batch pays
-        # one banded shuffle of skinny signature rows against the corpus
-        # index, never a corpus×corpus pass — the 100 TB ingest shape.
-        if not node.unique_key:
-            raise ValueError(
-                f"dedup_insert strategy requires unique_key on {node.name}"
-            )
-        from ..operators import dedup as _dedup
-
-        text_col = node.dedup_text_col
-        if text_col not in new_rows.columns:
-            raise ValueError(
-                f"dedup_insert: text column {text_col!r} not in {node.name}"
-            )
-        spark = project.spark
-        fp = F.md5(F.col(text_col))
-        fp_tbl = project.qualified(f"{node.name}__dedup_fps")
-        sh_tbl = project.qualified(f"{node.name}__lsh_shingles")
-        bd_tbl = project.qualified(f"{node.name}__lsh_bands")
-        kw = dict(node.dedup_kwargs or {})
-        idx_kw = {
-            k: kw[k]
-            for k in ("shingle_k", "num_hashes", "bands")
-            if k in kw
-        }
-
-        # Start-of-run heal: a prior run may have crashed between the
-        # target commit and _commit_companions() — target rows then exist
-        # that no companion knows about, and since the companions are
-        # append-only once bootstrapped, every exact/near dup of those
-        # rows would be admitted FOREVER without repair (the bootstrap
-        # path only runs when a table is missing, never when it is merely
-        # stale). Derive each companion's gap from target-minus-companion
-        # keys and append it BEFORE reading companion state below. Cost:
-        # one skinny-column anti-join per companion per run — the batch
-        # path runs per pipeline invocation, not per micro-batch.
-        if spark.catalog.tableExists(fp_tbl):
-            missing_fps = (
-                existing.select(fp.alias("__fp"))
-                .distinct()
-                .join(spark.table(fp_tbl), "__fp", "left_anti")
-                # reads fp_tbl and appends to it — cut lineage first
-                .localCheckpoint(eager=True)
-            )
-            if not missing_fps.isEmpty():
-                missing_fps.write.mode("append").format(
-                    node.file_format
-                ).saveAsTable(fp_tbl)
-        for comp_tbl in (sh_tbl, bd_tbl):
-            if not spark.catalog.tableExists(comp_tbl):
-                continue
-            uncovered = existing.join(
-                spark.table(comp_tbl)
-                .select(F.col("doc").alias(node.unique_key))
-                .distinct(),
-                node.unique_key,
-                "left_anti",
-            )
-            if uncovered.isEmpty():
-                continue
-            heal_sh, heal_bd = _dedup.build_lsh_index(
-                uncovered, node.unique_key, text_col, **idx_kw
-            )
-            heal_part = heal_sh if comp_tbl == sh_tbl else heal_bd
-            heal_part.localCheckpoint(eager=True).write.mode("append").format(
-                node.file_format
-            ).saveAsTable(comp_tbl)
-
-        if spark.catalog.tableExists(fp_tbl):
-            # Fingerprint companion table: the exact-dup anti-join probes
-            # stored md5s instead of re-scanning the corpus text column.
-            spark.catalog.refreshTable(fp_tbl)
-            seen = spark.table(fp_tbl)
-        else:
-            seen = existing.select(fp.alias("__fp")).distinct()
-        w_fp = Window.partitionBy("__fp").orderBy(F.col(node.unique_key))
-        fresh = (
-            new_rows.withColumn("__fp", fp)
-            # within-batch exact dedup first (keep the lowest key —
-            # deterministic), then drop rows whose text already exists.
-            .withColumn("__rn", F.row_number().over(w_fp))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .join(seen, "__fp", "left_anti")
-            .drop("__fp")
-            # Retry guard: a re-emitted batch whose rows already committed
-            # to the target (crash after target write) must not re-insert —
-            # `combined` below unions survivors with existing, so an
-            # existing id reaching survivors would duplicate the row.
-            .join(existing.select(node.unique_key), node.unique_key, "left_anti")
-        )
-        # Persistent banded index: without it every batch re-bands the
-        # ENTIRE corpus (measured: 62 s against a 500k-doc corpus for an
-        # EMPTY batch). The companion tables {name}__lsh_shingles /
-        # {name}__lsh_bands hold the corpus's shingle sets and banded
-        # rows; each run reuses them (per-batch cost scales with the
-        # batch) and appends the accepted survivors' rows, so the index
-        # tracks the corpus. Bootstrap on first incremental run; dropped
-        # on full refresh (materialize()); changing the LSH kwargs
-        # requires a full refresh — they are part of the node's
-        # state:modified fingerprint, so dbt-style state selection flags
-        # exactly that.
-        have_index = spark.catalog.tableExists(sh_tbl) and spark.catalog.tableExists(bd_tbl)
-        if have_index:
-            spark.catalog.refreshTable(sh_tbl)
-            spark.catalog.refreshTable(bd_tbl)
-        if have_index:
-            kw["corpus_index"] = (spark.table(sh_tbl), spark.table(bd_tbl))
-        survivors = _dedup.dedup_against_corpus(
-            fresh,
-            existing,
-            node.unique_key,
-            text_col,
-            **kw,
-        )
-        # Eagerly cut the lineage NOW: survivors' plan READS the companion
-        # tables (seen fps / corpus_index) AND the target table, and it is
-        # re-evaluated both at the final target write and at the deferred
-        # companion appends below — without the checkpoint those
-        # re-evaluations would see their own writes and silently drop
-        # every new row.
-        survivors = survivors.localCheckpoint(eager=True)
-        fp_existed = spark.catalog.tableExists(fp_tbl)
-
-        def _commit_companions() -> None:
-            # Runs AFTER the target table write commits. Writing the
-            # fingerprints/LSH bands first would be the fatal order: a
-            # failed target write with committed companions makes a retry
-            # anti-join the whole batch away (silent data loss) and leaves
-            # ghost docs in the index suppressing future legitimate
-            # near-dups. After a committed target, a crash before/inside
-            # this function leaves companions BEHIND the corpus — the safe
-            # side, because the start-of-run heal above repairs exactly
-            # this state on the next invocation (append the
-            # target-minus-companion keys before any companion is read),
-            # and the retry id-guard on `fresh` keeps the re-emitted batch
-            # from double-inserting meanwhile.
-            if have_index:
-                surv_sh, surv_bd = _dedup.build_lsh_index(
-                    survivors, node.unique_key, text_col, **idx_kw
-                )
-                surv_sh.write.mode("append").format(node.file_format).saveAsTable(sh_tbl)
-                surv_bd.write.mode("append").format(node.file_format).saveAsTable(bd_tbl)
-            else:
-                # Bootstrap from the just-committed target (== existing ∪
-                # survivors) so index content matches the corpus exactly.
-                spark.catalog.refreshTable(target)
-                corpus = spark.table(target)
-                all_sh, all_bd = _dedup.build_lsh_index(
-                    corpus, node.unique_key, text_col, **idx_kw
-                )
-                all_sh.write.mode("overwrite").format(node.file_format).saveAsTable(sh_tbl)
-                all_bd.write.mode("overwrite").format(node.file_format).saveAsTable(bd_tbl)
-            # Fingerprint table follows the same lifecycle as the LSH index.
-            if fp_existed:
-                survivors.select(fp.alias("__fp")).distinct().write.mode(
-                    "append"
-                ).format(node.file_format).saveAsTable(fp_tbl)
-            else:
-                spark.catalog.refreshTable(target)
-                spark.table(target).select(
-                    fp.alias("__fp")
-                ).distinct().write.mode("overwrite").format(node.file_format).saveAsTable(fp_tbl)
-
-        post_commit = _commit_companions
-        combined = existing.unionByName(survivors)
     elif strategy in ("merge", "delete+insert"):
         if not node.unique_key:
             raise ValueError(f"{strategy} strategy requires unique_key on {node.name}")
@@ -952,11 +651,6 @@ def _apply_incremental(project: "Project", node: "Node", new_rows: DataFrame) ->
     )
     staged = project.spark.table(project.qualified(staging))
     _layout(staged.write.mode("overwrite")).saveAsTable(target)
-    if post_commit is not None:
-        # Companion state (dedup fingerprints / LSH index) commits strictly
-        # AFTER the target table — see _commit_companions for why the
-        # reverse order loses data on retry.
-        post_commit()
     n = project.spark.table(target).count()
     project.spark.sql(f"DROP TABLE IF EXISTS {project.qualified(staging)}")
     return n

@@ -758,9 +758,11 @@ class Project:
         # unqualified probe to ACTUAL temp views: a bare tableExists(name)
         # would also match an unrelated permanent table in the session's
         # current database and silently read the wrong relation.
+        from pyspark.errors import AnalysisException
+
         try:
             return self.spark.catalog.getTable(name).isTemporary
-        except Exception:
+        except AnalysisException:  # no such table or view
             return False
 
     def relation_exists(self, name: str) -> bool:
@@ -1258,6 +1260,8 @@ class Project:
         Unlike the manifest (declared graph), this reflects what actually
         exists in the warehouse after a run — the doc-site / lineage input.
         """
+        from pyspark.errors import AnalysisException
+
         nodes = {}
         for name, node in self.nodes.items():
             if not self.relation_exists(name):
@@ -1279,8 +1283,8 @@ class Project:
                         for k in ("format", "location", "sizeInBytes", "numFiles")
                         if k in d and d[k] is not None
                     }
-            except Exception:
-                pass  # views / formats without DESCRIBE DETAIL
+            except AnalysisException:
+                pass  # views / formats without DESCRIBE DETAIL (incl. ParseException)
             nodes[f"{node.kind}.{self.name}.{name}"] = {
                 "metadata": {"name": name, "materialized": node.materialized, **stats},
                 "columns": columns,

@@ -475,6 +475,7 @@ def sim6_ivf_index_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..plans import Project
+    from ..plans.ingest import companions
     from ..plans.star_layout import _tag, _warehouse_path
 
     emb = load_testdata(spark, sf_dir)["embeddings"]
@@ -485,7 +486,7 @@ def sim6_ivf_index_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         # catalog is gone; a partitioned managed table cannot re-register
         # over them (and rebuilding at driver scale is seconds) — clear
         # and rebuild.
-        for t in (name, cent_tbl):
+        for t in (name, *companions(name, "ivf_insert")):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
             shutil.rmtree(_warehouse_path(spark, t), ignore_errors=True)
         state = {"df": emb.filter(F.col("vec_id") % 2 == 0)}

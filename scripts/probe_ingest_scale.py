@@ -1,14 +1,15 @@
 #!/usr/bin/env python
 """Ingest-path scale probe: per-batch dedup cost vs corpus size.
 
-Measures the streaming ingest micro-batch (`_dedup_ingest_batch` — the
-full pipeline INCLUDING the r9 idempotence replay guards and the commit
-marker) and, separately, the bare dedup core (fp anti-join + indexed
-near-dup + append, no guards) against corpora of increasing size with a
-fixed 50k-doc batch. The claim under test (VERDICT r8 item 6): per-batch
-cost scales with the BATCH, not the corpus — the banded-index probe is
-corpus-size-independent, and the r9 guards add only skinny broadcast-
-filtered key scans.
+Measures the dedup_insert ingest core (`plans.ingest.dedup_ingest` — the
+per-batch work of both the batch strategy and the streaming ingest,
+INCLUDING the key anti-join and the replay marker), the once-per-
+invocation heal (`dedup_heal`, nothing to heal), and, separately, the
+bare dedup core (fp anti-join + indexed near-dup, no writes) against
+corpora of increasing size with a fixed 50k-doc batch. The claim under
+test: per-batch cost scales with the BATCH, not the corpus — the
+banded-index probe is corpus-size-independent, and the key probes are
+skinny broadcast-filtered scans.
 
 Usage: python scripts/probe_ingest_scale.py [corpus_dir ...]
 Defaults: .scratch/dedup500k and .scratch/dedup5000k (built by
@@ -28,10 +29,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from dbt_analytics_spark.operators import dedup  # noqa: E402
-from dbt_analytics_spark.session import get_spark  # noqa: E402
-from dbt_analytics_spark.streaming.incremental import (  # noqa: E402
-    _dedup_ingest_batch,
+from dbt_analytics_spark.plans.ingest import (  # noqa: E402
+    companions,
+    dedup_heal,
+    dedup_ingest,
 )
+from dbt_analytics_spark.session import get_spark  # noqa: E402
 
 DIRS = sys.argv[1:] or [
     "/root/repo/.scratch/dedup500k",
@@ -101,17 +104,21 @@ def main() -> None:
         n_surv = surv.count()
         t_bare = time.time() - t0
 
-        # (b) the full guarded micro-batch (r9 semantics), timed end-to-end
-        # including all four writes + marker.
+        # (b) the once-per-invocation heal: one skinny anti-join of the
+        # target keys against the stored band doc ids (nothing to heal).
         t0 = time.time()
-        _dedup_ingest_batch(
-            batch, 1, tbl, query_id="probe", threshold=0.5
-        )
+        dedup_heal(spark, tbl, "doc_id", "text", threshold=0.5)
+        t_heal = time.time() - t0
+
+        # (c) the full per-batch core, timed end-to-end including the
+        # target append, the three companion appends and the marker.
+        t0 = time.time()
+        dedup_ingest(spark, tbl, batch, "doc_id", "text", threshold=0.5)
         t_guarded = time.time() - t0
 
-        # (c) replay of the committed batch (marker fast path).
+        # (d) replay of the committed batch (marker fast path).
         t0 = time.time()
-        _dedup_ingest_batch(batch, 1, tbl, query_id="probe", threshold=0.5)
+        dedup_ingest(spark, tbl, batch, "doc_id", "text", threshold=0.5)
         t_replay = time.time() - t0
 
         print(
@@ -123,14 +130,15 @@ def main() -> None:
                     "survivors_bare": n_surv,
                     "bootstrap_sec": round(t_bootstrap, 1),
                     "bare_batch_sec": round(t_bare, 1),
+                    "heal_sec": round(t_heal, 1),
                     "guarded_batch_sec": round(t_guarded, 1),
                     "replay_fastpath_sec": round(t_replay, 2),
                 }
             ),
             flush=True,
         )
-        for suffix in ("", "__lsh_shingles", "__lsh_bands", "__dedup_fps", "__stream_commits"):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}{suffix}")
+        for t in (tbl, *companions(tbl, "dedup_insert")):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
     spark.stop()
 
 

@@ -1,9 +1,8 @@
 #!/usr/bin/env python
 """IVF ingest scale probe: per-batch index-maintenance cost vs index size.
 
-Measures the `ivf_insert` micro-batch path (`_ivf_ingest_batch`,
-streaming/incremental.py — identical math to the batch strategy in
-plans/materialize.py) against persistent indexes of increasing size with
+Measures the `ivf_insert` ingest core (`plans.ingest.ivf_ingest` — the
+per-batch work of both the batch strategy and the streaming ingest) against persistent indexes of increasing size with
 a fixed 50k-vector batch. The claim under test: per-batch cost scales
 with the BATCH — the only corpus-size-dependent term is the idempotence
 anti-join's skinny id-column scan of the target (the same guard class
@@ -35,10 +34,11 @@ from pyspark.sql import functions as F  # noqa: E402
 from dbt_analytics_spark.operators.similarity import (  # noqa: E402
     ivf_index_topk,
 )
-from dbt_analytics_spark.session import get_spark  # noqa: E402
-from dbt_analytics_spark.streaming.incremental import (  # noqa: E402
-    _ivf_ingest_batch,
+from dbt_analytics_spark.plans.ingest import (  # noqa: E402
+    companions,
+    ivf_ingest,
 )
+from dbt_analytics_spark.session import get_spark  # noqa: E402
 
 SIZES = [int(a) for a in sys.argv[1:]] or [500_000, 5_000_000]
 BATCH_N = 50_000
@@ -68,29 +68,29 @@ def main() -> None:
     for n_base in SIZES:
         tbl = f"ivfprobe_{uuid.uuid4().hex[:8]}"
         t0 = time.monotonic()
-        _ivf_ingest_batch(
-            synth(spark, 0, n_base), tbl, "vec_id", "embedding", N_CELLS, 0
+        ivf_ingest(
+            spark, tbl, synth(spark, 0, n_base), "vec_id", n_cells=N_CELLS
         )
         bootstrap_s = time.monotonic() - t0
 
         batch = synth(spark, n_base, n_base + BATCH_N).localCheckpoint()
         t0 = time.monotonic()
-        _ivf_ingest_batch(batch, tbl, "vec_id", "embedding", N_CELLS, 0)
+        ivf_ingest(spark, tbl, batch, "vec_id", n_cells=N_CELLS)
         append_s = time.monotonic() - t0
 
         # Replay with the commit marker intact (round 10): the content
         # fingerprint matches and the batch returns before the corpus-id
         # anti-join — one batch-sized aggregate + a tiny marker lookup.
         t0 = time.monotonic()
-        _ivf_ingest_batch(batch, tbl, "vec_id", "embedding", N_CELLS, 0)
+        ivf_ingest(spark, tbl, batch, "vec_id", n_cells=N_CELLS)
         replay_s = time.monotonic() - t0
 
         # Replay with the marker LOST (crash between append and marker
         # commit): the guarded anti-join path — the pre-r10 replay cost,
         # kept measured so the fallback's growth term stays priced.
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}__ivf_commits")
+        spark.sql(f"DROP TABLE IF EXISTS {companions(tbl, 'ivf_insert')[-1]}")
         t0 = time.monotonic()
-        _ivf_ingest_batch(batch, tbl, "vec_id", "embedding", N_CELLS, 0)
+        ivf_ingest(spark, tbl, batch, "vec_id", n_cells=N_CELLS)
         replay_guarded_s = time.monotonic() - t0
 
         C = np.asarray(
@@ -124,7 +124,7 @@ def main() -> None:
         rec["load_gate"] = load_gate
         print(json.dumps(rec), flush=True)
         out.append(rec)
-        for t in (tbl, f"{tbl}__ivf_centroids", f"{tbl}__ivf_commits"):
+        for t in (tbl, *companions(tbl, "ivf_insert")):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 

@@ -1309,14 +1309,15 @@ def test_incremental_dedup_insert(spark):
     # fingerprint table mirrors the corpus (one md5 per distinct text)
     assert spark.table("corpus_t__dedup_fps").count() == 4
 
-    # Full refresh rebuilds the corpus AND drops the stale index.
+    # Full refresh rebuilds the corpus AND re-indexes it from scratch.
     state["rows"] = [(1, base)]
     p4 = Project(spark, name="ddins", full_refresh=True)
     p4.nodes = p.nodes
     p4.run(select="corpus_t")
     assert spark.table("corpus_t").count() == 1
-    assert not spark.catalog.tableExists("corpus_t__lsh_bands")
-    assert not spark.catalog.tableExists("corpus_t__dedup_fps")
+    idx_docs = {r["doc"] for r in spark.table("corpus_t__lsh_bands").select("doc").distinct().collect()}
+    assert idx_docs == {1}
+    assert spark.table("corpus_t__dedup_fps").count() == 1
 
 
 def test_dedup_insert_companions_commit_after_target(spark, monkeypatch):

@@ -44,7 +44,7 @@ def ivf_project(spark):
     for t in (
         "vec_index",
         "vec_index__ivf_centroids",
-        "vec_index__ivf_commits",
+        "vec_index__ingest_commits",
     ):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
     p = Project(spark, name="ivfp")
@@ -202,7 +202,7 @@ def test_stream_ivf_ingest_end_to_end(spark, tmp_path):
     import uuid
 
     from dbt_analytics_spark.streaming import stream_ivf_ingest
-    from dbt_analytics_spark.streaming.incremental import _ivf_ingest_batch
+    from dbt_analytics_spark.plans.ingest import ivf_ingest
 
     tbl = f"ivfstream_{uuid.uuid4().hex[:8]}"
     src, ckpt = str(tmp_path / "land"), str(tmp_path / "ckpt")
@@ -236,7 +236,7 @@ def test_stream_ivf_ingest_end_to_end(spark, tmp_path):
     replay = spark.createDataFrame(
         _rows(range(20, 35)), ["vec_id", "embedding", "payload"]
     )
-    _ivf_ingest_batch(replay, tbl, "vec_id", "embedding", 4, 1)
+    ivf_ingest(spark, tbl, replay, "vec_id", "embedding", n_cells=4, kmeans_iters=1)
     assert spark.table(tbl).count() == 35
 
     # stored cells follow the shared rule for streamed rows too
@@ -249,42 +249,50 @@ def test_stream_ivf_ingest_end_to_end(spark, tmp_path):
 
 
 def test_stream_ivf_reingest_after_drop_clears_stale_markers(spark):
-    """Stale __ivf_commits markers must not survive a target rebuild: if
-    a user follows the recovery instruction (drop the target, re-ingest)
-    WITHOUT dropping the commits table, every replayed batch whose key
-    set matches an old marker used to be fast-path-skipped — its rows
-    silently never written. Every path that creates the target with
-    mode('overwrite') now drops the marker table first."""
+    """Stale __ingest_commits markers must not survive a target rebuild:
+    if a user follows the recovery instruction (drop the target,
+    re-ingest) WITHOUT dropping the commits table, every replayed batch
+    whose key set matches an old marker would be fast-path-skipped — its
+    rows silently never written. Every path that creates the target drops
+    the marker table first. (A bootstrap records no marker: the corpus it
+    creates is the batch, so its replay anti-join is batch-sized.)"""
     import uuid
 
-    from dbt_analytics_spark.streaming.incremental import _ivf_ingest_batch
+    from dbt_analytics_spark.plans.ingest import ivf_ingest
 
     tbl = f"ivfdrop_{uuid.uuid4().hex[:8]}"
-    batch = spark.createDataFrame(
-        _rows(range(12)), ["vec_id", "embedding", "payload"]
+    first = spark.createDataFrame(
+        _rows(range(6)), ["vec_id", "embedding", "payload"]
     )
-    _ivf_ingest_batch(batch, tbl, "vec_id", "embedding", 3, 1)
+    batch = spark.createDataFrame(
+        _rows(range(6, 12)), ["vec_id", "embedding", "payload"]
+    )
+    ivf_ingest(spark, tbl, first, "vec_id", "embedding", n_cells=3, kmeans_iters=1)
+    ivf_ingest(spark, tbl, batch, "vec_id", "embedding", n_cells=3, kmeans_iters=1)
     assert spark.table(tbl).count() == 12
-    assert spark.table(f"{tbl}__ivf_commits").count() == 1
+    assert spark.table(f"{tbl}__ingest_commits").count() == 1
 
     # Scenario 1: drop the TARGET only (centroids stay pinned) and
-    # re-ingest the identical batch — the pinned-model rebuild path.
+    # re-ingest the marked batch — the pinned-model rebuild path.
     spark.sql(f"DROP TABLE {tbl}")
-    _ivf_ingest_batch(batch, tbl, "vec_id", "embedding", 3, 1)
-    assert spark.table(tbl).count() == 12, "stale marker skipped the batch"
+    ivf_ingest(spark, tbl, batch, "vec_id", "embedding", n_cells=3, kmeans_iters=1)
+    assert spark.table(tbl).count() == 6, "stale marker skipped the batch"
 
     # Scenario 2: drop target AND centroids (full re-index) but not the
     # commits table — the bootstrap path must also clear markers.
+    ivf_ingest(spark, tbl, first, "vec_id", "embedding", n_cells=3, kmeans_iters=1)
     spark.sql(f"DROP TABLE {tbl}")
     spark.sql(f"DROP TABLE {tbl}__ivf_centroids")
-    _ivf_ingest_batch(batch, tbl, "vec_id", "embedding", 3, 1)
-    assert spark.table(tbl).count() == 12
+    ivf_ingest(spark, tbl, first, "vec_id", "embedding", n_cells=3, kmeans_iters=1)
+    assert spark.table(tbl).count() == 6
 
-    # And the steady state still fast-paths: a replay of the committed
+    # And the steady state still fast-paths: a replay of a committed
     # batch inserts nothing.
-    _ivf_ingest_batch(batch, tbl, "vec_id", "embedding", 3, 1)
+    ivf_ingest(spark, tbl, batch, "vec_id", "embedding", n_cells=3, kmeans_iters=1)
+    ivf_ingest(spark, tbl, batch, "vec_id", "embedding", n_cells=3, kmeans_iters=1)
     assert spark.table(tbl).count() == 12
-    for t in (tbl, f"{tbl}__ivf_centroids", f"{tbl}__ivf_commits"):
+    assert spark.table(f"{tbl}__ingest_commits").count() == 1
+    for t in (tbl, f"{tbl}__ivf_centroids", f"{tbl}__ingest_commits"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -361,32 +369,28 @@ def test_ivf_bootstrap_crash_between_centroids_and_target_heals(
     # between must leave a state the retry simply overwrites — training
     # is deterministic, so the healed centroids are identical and the
     # corpus indexes consistently.
-    from dbt_analytics_spark.plans import materialize as mat
+    from dbt_analytics_spark.plans import ingest
 
     p, state = ivf_project
-    real = mat._ivf_initial_build
+    real = ingest.ivf_ingest
     calls = {"n": 0}
 
-    def boom(project, node, df):
+    def boom(spark, target, df, key, vec_col, **kw):
         # let the centroid write happen, then die before the target write
         import numpy as np
 
         from dbt_analytics_spark.operators import similarity as _sim
 
         calls["n"] += 1
-        vecs = df.filter(F.col(node.ivf_vec_col).isNotNull())
-        C, _ = _sim.kmeans_fit(
-            vecs, node.unique_key, node.ivf_vec_col, n_cells=4, max_iter=2
-        )
-        project.spark.createDataFrame(
+        vecs = df.filter(F.col(vec_col).isNotNull())
+        C, _ = _sim.kmeans_fit(vecs, key, vec_col, n_cells=4, max_iter=2)
+        spark.createDataFrame(
             [(i, [float(x) for x in row]) for i, row in enumerate(np.asarray(C))],
             "cell int, centroid array<double>",
-        ).write.mode("overwrite").saveAsTable(
-            project.qualified(f"{node.name}__ivf_centroids")
-        )
+        ).write.mode("overwrite").saveAsTable(f"{target}__ivf_centroids")
         raise RuntimeError("injected crash after centroids, before target")
 
-    monkeypatch.setattr(mat, "_ivf_initial_build", boom)
+    monkeypatch.setattr(ingest, "ivf_ingest", boom)
     res = {r.node: r for r in p.run(select="vec_index")}
     assert res["vec_index"].status == "error"
     assert spark.catalog.tableExists("vec_index__ivf_centroids")
@@ -398,7 +402,7 @@ def test_ivf_bootstrap_crash_between_centroids_and_target_heals(
 
     # Retry with the real path: target missing -> full initial build;
     # deterministic training rewrites the SAME centroids.
-    monkeypatch.setattr(mat, "_ivf_initial_build", real)
+    monkeypatch.setattr(ingest, "ivf_ingest", real)
     p2 = Project(spark, name="ivfp")
     p2.nodes = p.nodes
     res2 = {r.node: r for r in p2.run(select="vec_index")}
@@ -430,15 +434,16 @@ def test_ivf_insert_within_batch_duplicate_ids_collapse(spark, ivf_project):
 def test_stream_ivf_ingest_empty_first_batch_defers_bootstrap(spark, tmp_path):
     import uuid
 
-    from dbt_analytics_spark.streaming.incremental import _ivf_ingest_batch
+    from dbt_analytics_spark.plans.ingest import ivf_ingest
 
     tbl = f"ivfdefer_{uuid.uuid4().hex[:8]}"
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>, payload string")
-    _ivf_ingest_batch(empty, tbl, "vec_id", "embedding", 4, 0)
+    ivf_ingest(spark, tbl, empty, "vec_id", "embedding", n_cells=4, kmeans_iters=0)
     assert not spark.catalog.tableExists(tbl)  # no degenerate model pinned
-    _ivf_ingest_batch(
+    ivf_ingest(
+        spark, tbl,
         spark.createDataFrame(_rows(range(10)), ["vec_id", "embedding", "payload"]),
-        tbl, "vec_id", "embedding", 4, 0,
+        "vec_id", "embedding", n_cells=4, kmeans_iters=0,
     )
     assert spark.table(tbl).count() == 10
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -489,12 +494,12 @@ def test_stream_ivf_ingest_all_null_first_batch_is_staged_not_dropped(
     assert spark.catalog.tableExists(f"{tbl}__ivf_centroids")
     assert got.filter(F.col("__ivf_cell") == -1).count() == 3
     assert got.filter(F.col("__ivf_cell") >= 0).count() == 20
-    for t in (tbl, f"{tbl}__ivf_centroids", f"{tbl}__ivf_commits"):
+    for t in (tbl, f"{tbl}__ivf_centroids", f"{tbl}__ingest_commits"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_ivf_insert_replay_marker_fast_path_and_fallback(spark, ivf_project):
-    """Committed batches record a content fingerprint in __ivf_commits;
+    """Committed batches record a content fingerprint in __ingest_commits;
     a replayed batch fast-paths on the marker BEFORE the corpus-id
     anti-join. The marker is an optimization only: with it deleted
     (crash between append and marker commit), the replay falls back to
@@ -504,27 +509,27 @@ def test_ivf_insert_replay_marker_fast_path_and_fallback(spark, ivf_project):
     p.run(select="vec_index")  # bootstrap (40 rows)
     state["rows"] = _rows(range(40, 50))
     _rerun(spark, p, state)
-    assert spark.catalog.tableExists("vec_index__ivf_commits")
-    markers = spark.table("vec_index__ivf_commits").collect()
+    assert spark.catalog.tableExists("vec_index__ingest_commits")
+    markers = spark.table("vec_index__ingest_commits").collect()
     assert len(markers) == 1 and markers[0]["n"] == 10
 
     # Replay (marker hit): no dupes, no second marker row.
     _rerun(spark, p, state)
     assert spark.table("vec_index").count() == 50
-    assert spark.table("vec_index__ivf_commits").count() == 1
+    assert spark.table("vec_index__ingest_commits").count() == 1
 
     # Crash window: append committed, marker lost. Replay takes the
     # guarded path — still no dupes — and restores the marker.
-    spark.sql("DROP TABLE vec_index__ivf_commits")
+    spark.sql("DROP TABLE vec_index__ingest_commits")
     _rerun(spark, p, state)
     assert spark.table("vec_index").count() == 50
-    assert spark.table("vec_index__ivf_commits").count() == 1
+    assert spark.table("vec_index__ingest_commits").count() == 1
 
     # A genuinely new batch misses the marker and appends.
     state["rows"] = _rows(range(50, 55))
     _rerun(spark, p, state)
     assert spark.table("vec_index").count() == 55
-    assert spark.table("vec_index__ivf_commits").count() == 2
+    assert spark.table("vec_index__ingest_commits").count() == 2
 
     # Full refresh drops the markers with the corpus (a stale marker
     # could fast-path-skip a matching future batch).
@@ -532,4 +537,4 @@ def test_ivf_insert_replay_marker_fast_path_and_fallback(spark, ivf_project):
     p2 = Project(spark, name="ivfp", full_refresh=True)
     p2.nodes = p.nodes
     p2.run(select="vec_index")
-    assert not spark.catalog.tableExists("vec_index__ivf_commits")
+    assert not spark.catalog.tableExists("vec_index__ingest_commits")

@@ -1,7 +1,9 @@
-"""Every name the scripts and the benchmark take from the layout modules
-still exists — checked Spark-free, by reading both sides with ``ast``, so
-a rename in plans/star_layout.py or plans/layout_catalog.py cannot leave
-a probe script or perfbench/workloads.py calling a name that is gone."""
+"""Every name the scripts and the benchmark take from the layout and
+ingest modules still exists — checked Spark-free, by reading both sides
+with ``ast``, so a rename in plans/star_layout.py, plans/layout_catalog.py,
+plans/materialize.py, plans/ingest.py or streaming/incremental.py cannot
+leave a probe script or perfbench/workloads.py calling a name that is
+gone."""
 
 from __future__ import annotations
 
@@ -13,10 +15,16 @@ import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MODULES = {
-    f"dbt_analytics_spark.plans.{m}": os.path.join(
-        ROOT, "dbt_analytics_spark", "plans", f"{m}.py"
+    f"dbt_analytics_spark.{m}": os.path.join(
+        ROOT, "dbt_analytics_spark", *m.split(".")
+    ) + ".py"
+    for m in (
+        "plans.star_layout",
+        "plans.layout_catalog",
+        "plans.materialize",
+        "plans.ingest",
+        "streaming.incremental",
     )
-    for m in ("star_layout", "layout_catalog")
 }
 CALLERS = sorted(
     glob.glob(os.path.join(ROOT, "scripts", "*.py"))
@@ -46,7 +54,7 @@ def _defined(module: str) -> set[str]:
 
 def _used(path: str) -> set[tuple[str, str]]:
     """``(module, name)`` for every name ``path`` imports from, or reads
-    as an attribute of, one of the layout modules."""
+    as an attribute of, one of the checked modules."""
     tree = _parse(path)
     aliases: dict[str, str] = {}
     used: set[tuple[str, str]] = set()

@@ -673,7 +673,7 @@ def test_dedup_ingest_batch_replay_idempotent(spark, monkeypatch):
     import pytest
 
     from dbt_analytics_spark.operators import dedup as dd
-    from dbt_analytics_spark.streaming.incremental import _dedup_ingest_batch
+    from dbt_analytics_spark.plans.ingest import dedup_heal, dedup_ingest
 
     tbl = f"ingest_rp_{uuid.uuid4().hex[:8]}"
     base = "the quick brown fox jumps over the lazy dog again today " * 4
@@ -690,14 +690,16 @@ def test_dedup_ingest_batch_replay_idempotent(spark, monkeypatch):
             for r in spark.table(f"{tbl}__lsh_bands").select("doc").distinct().collect()
         }
 
+    def ingest(batch):
+        dedup_ingest(spark, tbl, batch, "doc_id", "text", threshold=0.4)
+
     b0 = spark.createDataFrame([(1, base), (2, other)], ["doc_id", "text"])
-    _dedup_ingest_batch(b0, 0, tbl, query_id="q-test", threshold=0.4)
+    ingest(b0)
     assert target_ids() == [1, 2]
     assert index_docs() == {1, 2}
 
-    # Pure replay of a fully committed batch: the commit marker
-    # short-circuits before any write.
-    _dedup_ingest_batch(b0, 0, tbl, query_id="q-test", threshold=0.4)
+    # Pure replay of a committed batch: nothing is written twice.
+    ingest(b0)
     assert target_ids() == [1, 2]
     assert spark.table(f"{tbl}__dedup_fps").count() == 2
     assert spark.table(f"{tbl}__lsh_bands").count() == len(index_docs()) * 8
@@ -712,116 +714,132 @@ def test_dedup_ingest_batch_replay_idempotent(spark, monkeypatch):
 
     monkeypatch.setattr(dd, "build_lsh_index", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
-        _dedup_ingest_batch(b1, 1, tbl, query_id="q-test", threshold=0.4)
+        ingest(b1)
     monkeypatch.setattr(dd, "build_lsh_index", orig_build)
 
     assert target_ids() == [1, 2, 3]  # target committed
     assert index_docs() == {1, 2}  # companions did not
     assert spark.table(f"{tbl}__dedup_fps").count() == 2
-    marks = sorted(r["batch_id"] for r in spark.table(f"{tbl}__stream_commits").collect())
-    assert marks == [0]  # batch 1 not certified
+    # batch 1 not certified (only b0's replay is marked)
+    assert spark.table(f"{tbl}__ingest_commits").count() == 1
 
-    # Replay of the crashed batch: heals the companions, no target dup.
-    _dedup_ingest_batch(b1, 1, tbl, query_id="q-test", threshold=0.4)
+    # Replay of the crashed batch after the heal a new drain runs first:
+    # companions healed, no target dup.
+    dedup_heal(spark, tbl, "doc_id", "text", threshold=0.4)
+    ingest(b1)
     assert target_ids() == [1, 2, 3]
     assert index_docs() == {1, 2, 3}
     assert spark.table(f"{tbl}__dedup_fps").count() == 3
-    marks = sorted(r["batch_id"] for r in spark.table(f"{tbl}__stream_commits").collect())
-    assert marks == [0, 1]
+    assert spark.table(f"{tbl}__ingest_commits").count() == 2
 
     # The healed corpus still suppresses dups: an exact dup of doc 3 and a
     # near-dup of doc 1 are both dropped by the next batch.
     near = base.replace("lazy", "sleepy")
     b2 = spark.createDataFrame([(4, fresh), (5, near)], ["doc_id", "text"])
-    _dedup_ingest_batch(b2, 2, tbl, query_id="q-test", threshold=0.4)
+    ingest(b2)
     assert target_ids() == [1, 2, 3]
 
 
-def test_dedup_ingest_marker_keyed_on_query_identity(spark):
-    """ADVICE r8 (medium): batch ids are scoped to a checkpoint — after a
-    checkpoint delete/recreate they restart at 0. A commit marker keyed on
-    batch_id alone would short-circuit the re-numbered batches before any
-    write (silent data loss). The marker is now keyed on (query_id,
-    batch_id): a new query identity never matches old markers, while the
-    same identity still gets the fast path."""
+def test_dedup_ingest_content_marker(spark, monkeypatch):
+    """The replay marker is the batch's key-set content fingerprint, so
+    it cannot be fooled by batch ids restarting at 0 after a checkpoint
+    is recreated (ADVICE r8): a batch with new data is always admitted,
+    and a true replay of a committed batch returns before any write."""
     import uuid
 
-    from dbt_analytics_spark.streaming.incremental import _dedup_ingest_batch
+    import pyspark.sql.readwriter as _rw
 
-    tbl = f"ingest_qid_{uuid.uuid4().hex[:8]}"
+    from dbt_analytics_spark.plans.ingest import dedup_ingest
+
+    tbl = f"ingest_mk_{uuid.uuid4().hex[:8]}"
     doc_a = "the quick brown fox jumps over the lazy dog again today " * 4
     doc_b = "tokenizer corpora need unique vocabulary spread wide apart " * 4
+    doc_c = "astronomy telescopes galaxies spectra and deep sky surveys " * 4
 
     def target_ids():
         spark.catalog.refreshTable(tbl)
         return sorted(r["doc_id"] for r in spark.table(tbl).collect())
 
-    b0 = spark.createDataFrame([(1, doc_a)], ["doc_id", "text"])
-    _dedup_ingest_batch(b0, 0, tbl, query_id="ckpt-1", threshold=0.4)
-    assert target_ids() == [1]
+    def ingest(rows):
+        batch = spark.createDataFrame(rows, ["doc_id", "text"])
+        dedup_ingest(spark, tbl, batch, "doc_id", "text", threshold=0.4)
 
-    # "Checkpoint recreated": new query identity, batch ids restart at 0,
-    # and the batch carries genuinely NEW data. The old marker (batch 0)
-    # must NOT short-circuit it.
-    b0_new = spark.createDataFrame([(2, doc_b)], ["doc_id", "text"])
-    _dedup_ingest_batch(b0_new, 0, tbl, query_id="ckpt-2", threshold=0.4)
-    assert target_ids() == [1, 2]
+    ingest([(1, doc_a)])
+    ingest([(2, doc_b)])
+    # "Checkpoint recreated": the next batch carries new data and is
+    # admitted whatever its batch id.
+    ingest([(3, doc_c)])
+    assert target_ids() == [1, 2, 3]
+    assert spark.table(f"{tbl}__ingest_commits").count() == 2
 
-    # Same identity + batch id = genuine replay: fast path skips (doc 3
-    # would otherwise be admitted — proves the marker, not the dedup,
-    # stopped it).
-    fresh = "astronomy telescopes galaxies spectra and deep sky surveys " * 4
-    b0_replay = spark.createDataFrame([(3, fresh)], ["doc_id", "text"])
-    _dedup_ingest_batch(b0_replay, 0, tbl, query_id="ckpt-2", threshold=0.4)
-    assert target_ids() == [1, 2]
+    # A true replay fast-paths: not one table write.
+    writes = []
+    orig = _rw.DataFrameWriter.saveAsTable
 
-    marks = sorted(
-        (r["query_id"], r["batch_id"])
-        for r in spark.table(f"{tbl}__stream_commits").collect()
-    )
-    assert marks == [("ckpt-1", 0), ("ckpt-2", 0)]
+    def counting(self, name, *a, **kw):
+        writes.append(name)
+        return orig(self, name, *a, **kw)
 
-    # No durable identity (query_id=None): marker fast path and marker
-    # writes are both skipped — the per-write guards alone carry replays.
-    b1 = spark.createDataFrame([(4, fresh)], ["doc_id", "text"])
-    _dedup_ingest_batch(b1, 99, tbl, query_id=None, threshold=0.4)
-    _dedup_ingest_batch(b1, 99, tbl, query_id=None, threshold=0.4)  # replay
-    assert target_ids() == [1, 2, 4]
-    assert spark.table(f"{tbl}__stream_commits").count() == 2
+    monkeypatch.setattr(_rw.DataFrameWriter, "saveAsTable", counting)
+    ingest([(3, doc_c)])
+    assert writes == []
+    monkeypatch.setattr(_rw.DataFrameWriter, "saveAsTable", orig)
+    assert target_ids() == [1, 2, 3]
 
 
-def test_dedup_ingest_legacy_marker_migrates(spark):
-    """A pre-r9 marker table (batch_id only) must never satisfy the fast
-    path — its ids are not durable across checkpoint recreation — and is
-    migrated to the keyed schema at the next commit."""
+@pytest.mark.parametrize("strategy", ["dedup_insert", "ivf_insert"])
+def test_ingest_ignores_earlier_marker_tables(spark, strategy):
+    """Marker tables of the earlier layouts — ``__stream_commits`` keyed
+    on (query_id, batch_id) and ``__ivf_commits`` holding content
+    fingerprints — are never read: even a fingerprint equal to the
+    batch's own does not make it skip."""
     import uuid
 
-    from dbt_analytics_spark.streaming.incremental import _dedup_ingest_batch
+    from dbt_analytics_spark.plans.ingest import (
+        _batch_key_fingerprint,
+        dedup_ingest,
+        ivf_ingest,
+    )
 
-    tbl = f"ingest_leg_{uuid.uuid4().hex[:8]}"
-    doc_a = "the quick brown fox jumps over the lazy dog again today " * 4
-    doc_b = "tokenizer corpora need unique vocabulary spread wide apart " * 4
+    tbl = f"ingest_old_{uuid.uuid4().hex[:8]}"
+    if strategy == "dedup_insert":
+        texts = [
+            "the quick brown fox jumps over the lazy dog again today " * 4,
+            "tokenizer corpora need unique vocabulary spread wide apart " * 4,
+        ]
+        first, batch = (
+            spark.createDataFrame([(i + 1, t)], ["doc_id", "text"])
+            for i, t in enumerate(texts)
+        )
+        key = "doc_id"
 
-    b0 = spark.createDataFrame([(1, doc_a)], ["doc_id", "text"])
-    _dedup_ingest_batch(b0, 0, tbl, query_id="ckpt-1", threshold=0.4)
+        def ingest(df):
+            dedup_ingest(spark, tbl, df, key, "text", threshold=0.4)
 
-    # Simulate the legacy marker layout.
-    spark.createDataFrame([(0,), (1,)], "batch_id long").write.mode(
-        "overwrite"
-    ).saveAsTable(f"{tbl}__stream_commits")
+    else:
+        cols = ["vec_id", "embedding", "payload"]
+        first = spark.createDataFrame(_ivf_rows(range(8)), cols)
+        batch = spark.createDataFrame(_ivf_rows(range(8, 12)), cols)
+        key = "vec_id"
 
-    # batch_id 1 is "marked" in the legacy table, but the legacy mark is
-    # untrusted: the batch must still process (new doc admitted).
-    b1 = spark.createDataFrame([(2, doc_b)], ["doc_id", "text"])
-    _dedup_ingest_batch(b1, 1, tbl, query_id="ckpt-1", threshold=0.4)
+        def ingest(df):
+            ivf_ingest(spark, tbl, df, key, "embedding", n_cells=2)
+
+    ingest(first)
+    spark.createDataFrame(
+        [("q-old", 0), ("q-old", 1)], "query_id string, batch_id long"
+    ).write.saveAsTable(f"{tbl}__stream_commits")
+    spark.createDataFrame(
+        [_batch_key_fingerprint(batch, key)], "n long, h1 string, h2 string"
+    ).write.saveAsTable(f"{tbl}__ivf_commits")
+    n_before = spark.table(tbl).count()
+    ingest(batch)
     spark.catalog.refreshTable(tbl)
-    assert sorted(r["doc_id"] for r in spark.table(tbl).collect()) == [1, 2]
+    assert spark.table(tbl).count() == n_before + batch.count()
 
-    # Marker table migrated: keyed schema, legacy rows dropped (markers
-    # are an optimization — replays of old batches take the guarded path).
-    spark.catalog.refreshTable(f"{tbl}__stream_commits")
-    marker = spark.table(f"{tbl}__stream_commits")
-    assert set(marker.columns) == {"query_id", "batch_id"}
-    assert [(r["query_id"], r["batch_id"]) for r in marker.collect()] == [
-        ("ckpt-1", 1)
+
+def _ivf_rows(ids, dim: int = 4):
+    return [
+        (int(i), [float((i * 7 + d * 3) % 11 - 5) for d in range(dim)], f"d{i}")
+        for i in ids
     ]
