@@ -21,6 +21,9 @@ from __future__ import annotations
 import os
 import threading
 
+from py4j.protocol import Py4JError
+from pyspark import StorageLevel
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -240,20 +243,19 @@ def _input_disk_bytes(df: DataFrame) -> int | None:
             if f.startswith("file:"):
                 f = "/" + f.split(":", 1)[1].lstrip("/")
             total += os.stat(f).st_size
-    except Exception:
+    except (OSError, Py4JError, PySparkException):
         return None
     if not files:
         return None
     return total
 
 
-def _resolve_sig_mode(df: DataFrame, sig_mode: str) -> str:
-    """``auto`` → fold/agg by the input's on-disk bytes (metadata-only);
-    explicit modes pass through. Any failure to size the input falls
-    back to the shuffle-free fold."""
+def _resolve_sig_mode(total: int | None, sig_mode: str) -> str:
+    """``auto`` → fold/agg by the input's on-disk bytes ``total`` (from
+    ``_input_disk_bytes``); explicit modes pass through. An input that
+    could not be sized takes the shuffle-free fold."""
     if sig_mode != "auto":
         return sig_mode
-    total = _input_disk_bytes(df)
     if total is None:
         return "fold"
     return "agg" if total >= SIG_AGG_MIN_BYTES else "fold"
@@ -270,13 +272,12 @@ def _resolve_sig_mode(df: DataFrame, sig_mode: str) -> str:
 SHINGLE_ARROW_MIN_BYTES = 4 << 20
 
 
-def _resolve_shingle_mode(df: DataFrame, shingle_mode: str) -> str:
-    """``auto`` → expr/arrow by the input's on-disk bytes; explicit modes
-    pass through. Unsizeable inputs take the expression path (no Python
-    workers needed, always safe)."""
+def _resolve_shingle_mode(total: int | None, shingle_mode: str) -> str:
+    """``auto`` → expr/arrow by the input's on-disk bytes ``total``;
+    explicit modes pass through. Unsizeable inputs take the expression
+    path (no Python workers needed, always safe)."""
     if shingle_mode != "auto":
         return shingle_mode
-    total = _input_disk_bytes(df)
     if total is None:
         return "expr"
     return "arrow" if total >= SHINGLE_ARROW_MIN_BYTES else "expr"
@@ -289,7 +290,7 @@ def _resolve_shingle_mode(df: DataFrame, shingle_mode: str) -> str:
 #: where dd3 is scheduler-floor bound) to the cluster-true shuffle
 #: shape: SHUFFLE_HASH band self-join (a corpus-sized banded relation
 #: can never ride a broadcast at 100 TB) and a shuffle-hash first
-#: verify join. Measured at 500k docs (probe_dd3_tail2, min-of-3):
+#: verify join. Measured at 500k docs (OPTIMIZATION_r16.md, min-of-3):
 #: shuffle shape 22.3 s vs 25.9-28.1 s for the all-broadcast plan —
 #: the 416 MiB banded broadcast plus one of the two 260 MiB index
 #: broadcasts were single-threaded driver builds the shuffle shape
@@ -300,7 +301,7 @@ CAND_SHUFFLE_MIN_BYTES = 16 << 20
 #: Source-corpus on-disk bytes up to which the SECOND verify join
 #: broadcasts the shingle index explicitly. Join2 re-keys the pair
 #: stream by doc2 while each row already carries its ~450 B sh1 array —
-#: a shuffle there moves ~15 GB at 500k docs (probe_dd3_tail:
+#: a shuffle there moves ~15 GB at 500k docs (OPTIMIZATION_r16.md:
 #: autoBroadcastJoinThreshold=-1 ran 56 s vs 22-28 s), so the broadcast
 #: is kept for any corpus whose index plausibly fits an executor
 #: (256 MB of source text ≈ 1.2 GB of hashed index). Past the gate the
@@ -352,12 +353,21 @@ def _persist_tracked(df: DataFrame) -> DataFrame:
     from repeat 2 on once the banded persist doubled the entries per
     call — 0.97 s cache-hit repeats became 7 s full recomputes.)
     Instead the existing frame is refreshed to most-recently-used and
-    returned."""
+    returned.
+
+    Entries that are no longer cached are dropped from tracking first: a
+    DROP TABLE uncaches every frame that scans the table, and handing
+    such a frame back would re-read the dropped table's files. They are
+    not unpersisted — that would uncache a live entry with the same
+    plan."""
     with _INDEX_LOCK:
+        _PERSISTED_INDEXES[:] = [
+            c for c in _PERSISTED_INDEXES if c.storageLevel != StorageLevel.NONE
+        ]
         for i, cached in enumerate(_PERSISTED_INDEXES):
             try:
                 same = df.sameSemantics(cached)
-            except Exception:
+            except (Py4JError, PySparkException):
                 same = False
             if same:
                 _PERSISTED_INDEXES.append(_PERSISTED_INDEXES.pop(i))
@@ -376,14 +386,19 @@ def _shingle_and_band(
     shingle_k: int,
     num_hashes: int,
     bands: int,
-    sig_mode: str = "auto",
-    shingle_mode: str = "auto",
+    sig_mode: str = "fold",
+    shingle_mode: str = "expr",
     with_vec: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared LSH front half: persisted shingle index + skinny banded
     relation (doc, band, bucket). The LSH shuffle carries ONLY the banded
     rows — never the shingle arrays; at 100 TB that is ``bands`` skinny
     rows per document, and shingle payloads rejoin only for candidates.
+
+    ``sig_mode``/``shingle_mode`` arrive resolved: each caller sizes its
+    input once (``_input_disk_bytes``) and resolves ``auto`` with
+    ``_resolve_sig_mode``/``_resolve_shingle_mode``. The defaults are
+    what an unsizeable input resolves to.
 
     ``with_vec=True`` additionally carries the full per-doc bucket
     vector (``vec`` array<long>[bands]) on every banded row and PERSISTS
@@ -394,8 +409,6 @@ def _shingle_and_band(
     physical-plan canonicalization breaks on MapInArrow/InMemoryScan
     subtrees and ReuseExchange never fires here (measured: both sig
     exchanges executed in the r16 SQL-metrics attribution run)."""
-    sig_mode = _resolve_sig_mode(df, sig_mode)
-    shingle_mode = _resolve_shingle_mode(df, shingle_mode)
     rows_per_band = num_hashes // bands
     # The index stores HASHED shingles (array<long>), not strings — see
     # shingles_hashed: bounded per-task heap at the 5M-doc probe scale and
@@ -489,11 +502,13 @@ def minhash_lsh_pairs(
     sessions while leaving room for interleaved/concurrent calls. Call
     ``release_shingle_indexes()`` when done with all results.
     """
+    src_bytes = _input_disk_bytes(df)
     shingled, banded = _shingle_and_band(
         df, id_col, text_col, shingle_k, num_hashes, bands,
-        sig_mode=sig_mode, shingle_mode=shingle_mode, with_vec=True,
+        sig_mode=_resolve_sig_mode(src_bytes, sig_mode),
+        shingle_mode=_resolve_shingle_mode(src_bytes, shingle_mode),
+        with_vec=True,
     )
-    src_bytes = _input_disk_bytes(df)
     candidates = _lsh_candidates_once(
         banded, bands, n_salts=n_salts, shuffle=_use_shuffle_cand(src_bytes)
     )
@@ -680,8 +695,12 @@ def minhash_lsh_pairs_cross(
     ``bands`` skinny rows per doc) and reuse across batches; the shingle
     verify rejoins only candidate payloads.
     """
+    new_bytes = _input_disk_bytes(new)
     new_sh, new_banded = _shingle_and_band(
-        new, id_col, text_col, shingle_k, num_hashes, bands, with_vec=True
+        new, id_col, text_col, shingle_k, num_hashes, bands,
+        sig_mode=_resolve_sig_mode(new_bytes, "auto"),
+        shingle_mode=_resolve_shingle_mode(new_bytes, "auto"),
+        with_vec=True,
     )
     if corpus_index is not None:
         # Pre-built (shingles, banded) relations — e.g. the persisted
@@ -693,19 +712,18 @@ def minhash_lsh_pairs_cross(
         # no bucket vector, so the exactly-once emission filter is
         # unavailable — candidates fall back to the dedup aggregate.
         cor_sh, cor_banded = corpus_index
+        cor_bytes = _input_disk_bytes(cor_sh)
         once = False
     else:
+        cor_bytes = _input_disk_bytes(corpus)
         cor_sh, cor_banded = _shingle_and_band(
             corpus, id_col, text_col, shingle_k, num_hashes, bands,
+            sig_mode=_resolve_sig_mode(cor_bytes, "auto"),
+            shingle_mode=_resolve_shingle_mode(cor_bytes, "auto"),
             with_vec=True,
         )
         once = True
 
-    new_bytes = _input_disk_bytes(new)
-    cor_bytes = (
-        _input_disk_bytes(corpus) if corpus_index is None
-        else _input_disk_bytes(cor_sh)
-    )
     shuffle = _use_shuffle_cand(new_bytes) or _use_shuffle_cand(cor_bytes)
     if once:
         candidates = _lsh_candidates_once(
@@ -780,8 +798,11 @@ def build_lsh_index(
     ``corpus_index=``. This is the 100 TB ingest design: the corpus is
     banded ONCE (and appended to incrementally as batches land), so
     per-batch dedup cost scales with the batch, never the corpus."""
+    src_bytes = _input_disk_bytes(corpus)
     return _shingle_and_band(
-        corpus, id_col, text_col, shingle_k, num_hashes, bands
+        corpus, id_col, text_col, shingle_k, num_hashes, bands,
+        sig_mode=_resolve_sig_mode(src_bytes, "auto"),
+        shingle_mode=_resolve_shingle_mode(src_bytes, "auto"),
     )
 
 

@@ -645,6 +645,38 @@ for _name in _BEYOND_DRIVER_CAP:
 
 assert len(REGISTRY) == len(_ALL), "priority reorder dropped a query"
 
+#: Queries bench.py times for the headline metric and the profiler runs by
+#: default (a representative mix: scan-agg, joins, windows, spine,
+#: text/dedup/similarity pipeline ops).
+HEADLINE = [
+    "q1_pricing_summary",
+    # q1 on the cents-enriched lineitem layout (one-time build paid in
+    # the untimed warmup, like j1b's star tables); the ad-hoc q1 row
+    # stays benched beside it and ROUTES to the layout when fresh and
+    # above the fact-size gate.
+    "q1b_pricing_summary_layout",
+    "j1_join_agg",
+    # the same star join on the engine-owned bucketed layout (one-time
+    # build cost paid in the untimed warmup, like a real warehouse): the
+    # ad-hoc j1/w3 rows stay benched beside these for honesty.
+    "j1b_join_agg_bucketed",
+    "j3_top1_per_group",
+    "j3b_regex_lateral_top1",
+    "w3_pct_of_total",
+    "w3b_pct_of_total_bucketed",
+    "q13_custdist",
+    "q13b_custdist_bucketed",
+    "g1_date_spine",
+    "u1_union_dedup",
+    "ev1_sessionize",
+    "j5_explode_split",
+    "dd1_exact_dedup",
+    "dd3_minhash_lsh",
+    "sim1_cosine_topk",
+    "sim3_ivf_topk",
+    "txt2_quality",
+]
+
 
 def queries():
     return {name: builder for name, (builder, _) in REGISTRY.items()}

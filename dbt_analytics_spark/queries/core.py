@@ -125,7 +125,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle of tiny partial aggregates; AQE coalesces post-shuffle.
 
     Money math runs in EXACT integer cents/long space, not decimal: the
-    r13 stage decomposition (scripts/probe_q1_decomp.py, 60M rows,
+    r13 stage decomposition (BENCH_Q1_DECOMP_r13.json, 60M rows,
     min-of-5 interleaved, load+drift gated) measured the 128-bit decimal
     SUM accumulation as the dominant term — ONE decimal(18,2) sum cost
     1.4s over the 0.5s scan floor, the original 4-decimal-sum plan 3.6s,

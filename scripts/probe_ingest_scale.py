@@ -63,23 +63,29 @@ def main() -> None:
             .write.saveAsTable(f"{tbl}__dedup_fps")
         t_bootstrap = time.time() - t0
 
-        # Fixed-size batch: 80% fresh ids with fresh-ish text (suffix keeps
-        # them out of the near-dup radius), 20% exact dups of corpus rows.
+        # Fixed-size batch of every (n_corpus // BATCH_N)-th corpus row, so
+        # any corpus of at least BATCH_N docs fills it, under fresh ids.
+        # About 20% keep their corpus text (exact dups); the rest get new
+        # text drawn as build_dedup_corpus.py draws it, from content no
+        # corpus row has, so they fall outside the near-dup radius and
+        # the batch admits them.
+        novel_words = F.transform(
+            F.sequence(F.lit(1), F.lit(50) + F.col("doc_id") % 150),
+            lambda i: F.concat(
+                F.lit("w"),
+                F.pmod(F.xxhash64(F.lit("batch"), F.col("doc_id"), i), F.lit(50_000)),
+            ),
+        )
         batch = (
-            corpus.filter(F.col("doc_id") % (n_corpus // BATCH_N) == 3)
+            corpus.filter(F.col("doc_id") % (n_corpus // BATCH_N) == 0)
             .limit(BATCH_N)
             .withColumn("doc_id", F.col("doc_id") + 100_000_000)
             .withColumn(
                 "text",
                 F.when(
-                    F.col("doc_id") % 5 == 0, F.col("text")  # exact dup
-                ).otherwise(
-                    F.concat(
-                        F.col("text"),
-                        F.lit(" fresh suffix token "),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
+                    F.pmod(F.xxhash64("doc_id"), F.lit(5)) == 0,
+                    F.col("text"),  # exact dup
+                ).otherwise(F.concat_ws(" ", novel_words)),
             )
             .localCheckpoint(eager=True)
         )

@@ -650,6 +650,45 @@ def test_persist_tracked_dedupes_repeated_calls(spark):
     release_shingle_indexes()
 
 
+def test_lsh_index_cache_drops_entries_a_drop_table_uncached(spark):
+    """A DROP TABLE uncaches every persisted frame that scans the table.
+    The LSH index cache must not hand such a frame back to a later call
+    with the same plan: it would re-read the dropped table's files
+    (FAILED_READ_FILE.FILE_NOT_EXIST) instead of the re-created table."""
+    from dbt_analytics_spark.operators.dedup import (
+        _PERSISTED_INDEXES,
+        minhash_lsh_pairs,
+        release_shingle_indexes,
+    )
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    other = "one two three four five six seven eight nine ten"
+
+    def recreate(rows):
+        spark.sql("DROP TABLE IF EXISTS lsh_recreated")
+        spark.createDataFrame(rows, ["doc_id", "text"]).write.saveAsTable(
+            "lsh_recreated"
+        )
+
+    def pairs():
+        out = minhash_lsh_pairs(spark.table("lsh_recreated"), "doc_id", "text")
+        return sorted((r["doc1"], r["doc2"]) for r in out.collect())
+
+    release_shingle_indexes()
+    try:
+        recreate([(1, base), (2, base + " lambda"), (3, other)])
+        assert pairs() == [(1, 2)]
+        recreate([(7, other), (8, other + " eleven"), (9, base)])
+        assert pairs() == [(7, 8)]
+        tracked = list(_PERSISTED_INDEXES)
+        assert len(tracked) == 2  # the dropped table's entries are gone
+        assert pairs() == [(7, 8)]
+        assert _PERSISTED_INDEXES == tracked  # same data: reused
+    finally:
+        release_shingle_indexes()
+        spark.sql("DROP TABLE IF EXISTS lsh_recreated")
+
+
 def test_lsh_shuffle_and_broadcast_shapes_agree(spark):
     """The 16 MB source-bytes gate switches the candidate/verify joins
     between broadcast-friendly (small corpora — the driver's bench SFs)
